@@ -11,15 +11,14 @@ pandas pre-screen routes only the odd ones through the exact kernel.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..kernels.hashes import content_hash, ip_hash, site_hash, url_hash
-from ..kernels.robots import is_allowed, parse_robots
+from ..kernels.hashes import content_hash
+from ..kernels.robots import is_allowed
 from ..kernels.urlfilter import filter1
 from ..kernels.urlnorm import parse_url
 
@@ -88,17 +87,6 @@ def site_hash_udf(host: pd.Series, size: pd.Series) -> pd.Series:
     return pd.Series(site_hash_np(host, int(size.iloc[0])), dtype="int32")
 
 
-@pandas_udf(T.IntegerType())
-def ip_hash_udf(ip: pd.Series, size: pd.Series) -> pd.Series:
-    """ipHashCode % size (cfg.ip_site_list_size, types.h:36); see
-    site_hash_udf on why size is explicit."""
-    if not len(ip):  # Arrow may hand a zero-row batch
-        return pd.Series([], dtype="int32")
-    sz = int(size.iloc[0])
-    return pd.Series([ip_hash(x, sz) if x is not None else 0 for x in ip],
-                     dtype="int32")
-
-
 @pandas_udf(T.LongType())
 def content_bucket_udf(text: pd.Series, dup_size: pd.Series) -> pd.Series:
     return pd.Series([content_hash(t or "", int(s))
@@ -129,69 +117,37 @@ def robots_allowed_udf(path: pd.Series, forbidden: pd.Series,
     return pd.Series(out, dtype="bool")
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def parse_robots_udf(body: pd.Series, user_agent: pd.Series) -> pd.Series:
-    return pd.Series([
-        parse_robots(b or "", ua) for b, ua in zip(body, user_agent)
-    ])
-
-
-# --- fused hot-path stage (mapInPandas) ----------------------------
-
-FUSED_SCHEMA = ("host string, port int, path string, bucket long, "
-                "slot_id int, qseq long, depth int")
-
-
-def canon_hash_stage(df, hash_size: int = 64_000_000,
-                     site_size: int = 20_000):
-    """Fused canonicalize (O-3) + seen-bucket hash (O-6 key) +
-    site hash (O-7 key) as ONE mapInPandas stage.
-
-    Why not three pandas UDFs: a filter on a struct-UDF output makes
-    Catalyst evaluate the canonicalizer twice (once under Filter, once
-    under Project — 4 ArrowEvalPython nodes for 3 UDFs), and every UDF
-    is a separate Arrow round-trip. mapInPandas crosses Python once,
-    drops invalid rows in-batch, and runs all three numpy kernels on
-    the same resident frame. Input df needs columns url, qseq, depth.
-    """
-    import numpy as np
-
-    def fn(batches):
-        from ..kernels.vectorized import (
-            canonicalize_batch, site_hash_np, url_hash_np)
-        for pdf in batches:
-            r = canonicalize_batch(pdf["url"])
-            keep = r["valid"].to_numpy(dtype=bool)
-            host = r["host"][keep].reset_index(drop=True)
-            port = r["port"][keep].reset_index(drop=True)
-            path = r["path"][keep].reset_index(drop=True)
-            out = pd.DataFrame({
-                "host": host,
-                "port": port.astype("int32"),
-                "path": path,
-                "bucket": url_hash_np(host, port, path, hash_size),
-                "slot_id": site_hash_np(host, site_size),
-                "qseq": pdf["qseq"].to_numpy()[keep],
-                "depth": pdf["depth"].to_numpy()[keep].astype("int32"),
-            })
-            yield out
-
-    return df.mapInPandas(fn, FUSED_SCHEMA)
-
+# --- schedule-on-keys stage (mapInPandas) -------------------------
 
 KEYS_SCHEMA = "bucket long, slot_id int, qseq long"
 
 
 def canon_keys_stage(df, hash_size: int = 64_000_000,
                      site_size: int = 20_000):
-    """Schedule-on-keys variant of canon_hash_stage: canonicalizes and
-    hashes, but emits ONLY the integer keys (bucket, slot_id, qseq).
-    The scheduling decision needs nothing else; the fetch stage joins
+    """Canonicalize (O-3) + seen-bucket hash (O-6 key) + site hash
+    (O-7 key) as ONE mapInPandas stage that emits ONLY the integer keys
+    (bucket, slot_id, qseq); invalid URLs are dropped in-batch. The
+    scheduling decision needs nothing else; the fetch stage joins
     payload back by qseq. Keeps every downstream shuffle at ~20 B/row
     — at a 10^10-row frontier that is the difference between a
     hundreds-of-GB and a multi-TB shuffle. Input df needs columns
     url, qseq.
+
+    One mapInPandas, not three pandas UDFs: a filter on a struct-UDF
+    output makes Catalyst evaluate the canonicalizer twice, and every
+    UDF is a separate Arrow round-trip. An input with fewer partitions
+    than the cluster's default parallelism (a small file is one split)
+    is first hash-partitioned on qseq to that parallelism, so the
+    Python stage runs on every core; the placement is a function of
+    qseq, so a retried task sees the same rows. Reading the partition
+    count plans the input, so an input that ends in a shuffle runs
+    that shuffle here under adaptive execution; a file scan runs
+    nothing.
     """
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < n:
+        df = df.repartition(n, "qseq")
+
     def fn(batches):
         from ..kernels.vectorized import (
             canonicalize_batch, site_hash_np, url_hash_np)

@@ -9,18 +9,20 @@ semantics alone — but a Bloom filter earns its place as a MAP-SIDE
 PRE-FILTER in front of the exact anti-join:
 
   * no false negatives: `maybe_seen = false` PROVES the key is new,
-    so those rows bypass the anti-join shuffle entirely and are
-    routed straight to the novel side;
-  * false positives only send extra novel rows through the exact
-    join — correctness never depends on the filter.
+    so those rows cannot match in the exact join — the prefilter's
+    join condition carries `maybe_seen`, and such a row leaves the
+    join with `is_new = true` whatever the seen table holds;
+  * false positives only let extra novel rows reach the exact match
+    test, which then misses — correctness never depends on the filter.
 
 At 10^10 seen URLs the exact bitmap (hash_size 2^40 -> 128 GB) can't
 be broadcast, while a Bloom filter trades size for false-positive
 rate freely: m = 2^36 bits (8 GB, executor-memory-feasible as a
 torrent broadcast at real-cluster executor RAM; halve m and double
 the FP rate to fit smaller boxes). k hash probes derive from ONE md5
-via double hashing — pos_i = (h1 + i*h2) mod m — so build and probe
-cost one digest per key, and the whole construction is
+via double hashing — pos_i = (h1 + i*h2) mod m. Build and probe
+project the key to (h1 mod m, h2 mod m) once — one digest per key —
+and expand the k positions in numpy; the construction is
 engine-portable: the DuckDB oracle reproduces every bit position
 (contract query `crawl_bloom_prefilter`).
 
@@ -35,7 +37,8 @@ ORs the partials — associative, commutative, one pass) is exactly
 the merge a Bloom bitmap supports for free.
 
 Build is distributed and reuses the membership OR-reduce; the probe
-is one Arrow-vectorized numpy pass per batch (no per-row Python).
+is one Arrow-vectorized numpy pass per batch over two int64 columns
+(no per-row Python).
 """
 
 from __future__ import annotations
@@ -48,21 +51,44 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _md5_double_hash(col: Column, m_bits: int) -> Tuple[Column, Column]:
-    """(h1 mod m, h2 mod m) from ONE md5 of the key: h1 = int value
-    of hex chars 1-15, h2 = 2*int(hex chars 17-31) + 1 (odd, so the
-    probe sequence covers the bit space even for power-of-two m).
-    Both operands stay < 2^61 and m <= 2^55 keeps (h1m + i*h2m)
-    overflow-free in signed 64-bit — identical arithmetic on DuckDB."""
-    hx = F.md5(F.encode(col, "utf-8"))
+def _double_hash(hx: Column, m_bits: int) -> Tuple[Column, Column]:
+    """(h1 mod m, h2 mod m) from the md5 hex digest `hx` of a key:
+    h1 = int value of hex chars 1-15, h2 = 2*int(hex chars 17-31) + 1
+    (odd, so the probe sequence covers the bit space even for
+    power-of-two m). Both operands stay < 2^61 and m <= 2^55 keeps
+    (h1m + i*h2m) overflow-free in signed 64-bit — identical
+    arithmetic on DuckDB."""
     h1 = F.conv(F.substring(hx, 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(hx, 17, 15), 16, 10).cast("long") * 2 + 1
     return h1 % m_bits, h2 % m_bits
 
 
+def _md5_double_hash(col: Column, m_bits: int) -> Tuple[Column, Column]:
+    """_double_hash of ONE md5 of the key column."""
+    return _double_hash(F.md5(F.encode(col, "utf-8")), m_bits)
+
+
+def _with_hash_pair(df: DataFrame, col: str, m_bits: int) -> DataFrame:
+    """df + (_h1, _h2) long columns: (h1 mod m, h2 mod m) of df[col].
+    The digest is a projection of its own, referenced twice, so
+    Catalyst's CollapseProject does not inline it into both columns:
+    one md5 per row."""
+    hx = df.withColumn("_hx", F.md5(F.encode(F.col(col), "utf-8")))
+    h1m, h2m = _double_hash(F.col("_hx"), m_bits)
+    return hx.withColumn("_h1", h1m).withColumn("_h2", h2m).drop("_hx")
+
+
+def _expand(h1m: np.ndarray, h2m: np.ndarray, m_bits: int,
+            k: int) -> np.ndarray:
+    """(n, k) int64 bit positions (h1m + i*h2m) mod m for i < k — the
+    numpy twin of bloom_position_col."""
+    i = np.arange(k, dtype=np.int64)
+    return (h1m[:, None] + i * h2m[:, None]) % m_bits
+
+
 def bloom_position_col(col: Column, m_bits: int, k: int) -> Column:
     """array<long> of the k bit positions for a key column (JVM-side,
-    codegen'd; one md5 per key)."""
+    codegen'd; the cross-engine parity surface)."""
     h1m, h2m = _md5_double_hash(col, m_bits)
     return F.array(*[(h1m + F.lit(i) * h2m) % m_bits for i in range(k)])
 
@@ -70,56 +96,74 @@ def bloom_position_col(col: Column, m_bits: int, k: int) -> Column:
 def bloom_positions(df: DataFrame, col: str, m_bits: int,
                     k: int) -> DataFrame:
     """(pos: long) — every bit position the keys of `df[col]` set.
-    The build relation; also the cross-engine parity surface."""
+    The build's reference relation; also the cross-engine parity
+    surface."""
     return df.select(F.explode(bloom_position_col(F.col(col), m_bits, k))
                      .alias("pos"))
 
 
 def bloom_build(df: DataFrame, col: str, m_bits: int,
                 k: int) -> np.ndarray:
-    """Distributed Bloom build: positions computed JVM-side, then the
-    same per-partition OR-reduce as the exact membership bitmap
-    (operators/membership.py) — one pass, no shuffle."""
-    from .membership import seen_bitmap
-    return seen_bitmap(bloom_positions(df, col, m_bits, k), m_bits,
-                       bucket_col="pos")
+    """Distributed Bloom build: (h1 mod m, h2 mod m) projected
+    JVM-side, the k positions expanded in numpy inside the same
+    per-partition OR-reduce as the exact membership bitmap
+    (operators/membership.py) — one pass, no shuffle. Null keys set
+    no bits."""
+    from .membership import or_reduce_bitmap
+    pairs = _with_hash_pair(df.where(F.col(col).isNotNull()), col,
+                            m_bits).select("_h1", "_h2")
+    return or_reduce_bitmap(
+        pairs, m_bits,
+        lambda pdf: _expand(pdf["_h1"].to_numpy(np.int64),
+                            pdf["_h2"].to_numpy(np.int64),
+                            m_bits, k).ravel())
 
 
 def bloom_probe(df: DataFrame, bitmap: np.ndarray, col: str,
                 m_bits: int, k: int,
                 out_col: str = "maybe_seen") -> DataFrame:
     """Map-side probe: out_col = AND over the k bit tests against the
-    broadcast bitmap. false PROVES the key was never inserted."""
+    broadcast bitmap. false PROVES the key was never inserted; a null
+    key was never inserted, so it probes false."""
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(bitmap.tobytes())
 
     @F.pandas_udf("boolean")
-    def _test(pos: pd.Series) -> pd.Series:
+    def _test(h1m: pd.Series, h2m: pd.Series) -> pd.Series:
         bm = np.frombuffer(bc.value, np.uint8)
-        if not len(pos):
-            return pd.Series([], dtype=bool)
-        p = np.stack([np.asarray(a, np.int64) for a in pos])
-        hit = (bm[p >> 3] >> (p & 7).astype(np.uint8)) & 1
-        return pd.Series(hit.all(axis=1))
+        h1 = h1m.to_numpy(np.int64)
+        p = _expand(np.maximum(h1, 0), h2m.to_numpy(np.int64), m_bits, k)
+        hit = ((bm[p >> 3] >> (p & 7).astype(np.uint8)) & 1).all(axis=1)
+        return pd.Series(hit & (h1 >= 0))
 
-    return df.withColumn(
-        out_col, _test(bloom_position_col(F.col(col), m_bits, k)))
+    # null keys enter as h1 = -1, so both columns stay non-null int64
+    return (_with_hash_pair(df, col, m_bits)
+            .withColumn(out_col, _test(F.coalesce("_h1", F.lit(-1)),
+                                       F.coalesce("_h2", F.lit(0))))
+            .drop("_h1", "_h2"))
 
 
 def bloom_prefilter(candidates: DataFrame, seen: DataFrame, col: str,
                     seen_col: str, m_bits: int, k: int) -> DataFrame:
-    """The pre-filter composition: candidates whose Bloom probe says
-    `maybe_seen = false` bypass the exact anti-join (provably novel);
-    only the maybe-seen rows shuffle into the anti-join against the
-    exact seen table. Returns `candidates` columns + `is_new`."""
+    """The pre-filter composition: one probed frame left-joined to the
+    exact seen table on `key == seen_key AND maybe_seen`, with
+    `is_new = seen_key IS NULL`. A `maybe_seen = false` row fails the
+    join condition, so it is new without a seen-key match; a false
+    positive finds no seen key and stays new. Returns `candidates`
+    columns + `is_new`.
+
+    The candidate plan (canonicalization, probe) runs once. The cost
+    of that at scale: every candidate row, not just the maybe-seen
+    ones, travels to the join. While the deduped seen keys fit a
+    broadcast that is a map-side lookup; past it, the provably-new
+    rows also ride the join's shuffle — which a two-branch split
+    would spare only by evaluating the candidate plan twice or
+    materializing it."""
     bm = bloom_build(seen, seen_col, m_bits, k)
     probed = bloom_probe(candidates, bm, col, m_bits, k)
-    definitely_new = probed.filter(~F.col("maybe_seen")) \
-        .withColumn("is_new", F.lit(True))
-    maybe = probed.filter(F.col("maybe_seen"))
-    checked = maybe.join(
-        seen.select(F.col(seen_col).alias(col)).distinct()
-        .withColumn("_hit", F.lit(True)),
-        col, "left") \
-        .withColumn("is_new", F.col("_hit").isNull()).drop("_hit")
-    return definitely_new.unionByName(checked).drop("maybe_seen")
+    hits = seen.select(F.col(seen_col).alias("_seen_key")).distinct()
+    # a matched _seen_key equals a non-null key, so null means no hit
+    return (probed.join(hits, (F.col(col) == F.col("_seen_key"))
+                        & F.col("maybe_seen"), "left")
+            .withColumn("is_new", F.col("_seen_key").isNull())
+            .drop("_seen_key", "maybe_seen"))

@@ -22,6 +22,8 @@ bitmap (numpy, vectorized), the driver ORs the per-partition bitmaps.
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -30,10 +32,13 @@ from pyspark.sql import functions as F
 _BUILD_PARTS = 8  # bitmaps transferred to the driver = parts * size/8
 
 
-def seen_bitmap(seen: DataFrame, hash_size: int,
-                bucket_col: str = "bucket") -> np.ndarray:
-    """Materialize the seen table as a packed uint8 bitmap."""
-    nbytes = (hash_size + 7) // 8
+def or_reduce_bitmap(df: DataFrame, n_bits: int,
+                     positions: Callable[[pd.DataFrame], np.ndarray]
+                     ) -> np.ndarray:
+    """Packed uint8 bitmap of every bit `positions(batch)` (int64)
+    names over df's Arrow batches: each partition ORs into a local
+    bitmap, the driver ORs the partials. One job, no shuffle."""
+    nbytes = (n_bits + 7) // 8
 
     def to_bitmap(batches):
         bm = np.zeros(nbytes, np.uint8)
@@ -41,18 +46,25 @@ def seen_bitmap(seen: DataFrame, hash_size: int,
         for pdf in batches:
             if len(pdf):
                 any_rows = True
-                b = pdf[bucket_col].to_numpy(np.int64)
+                b = positions(pdf)
                 np.bitwise_or.at(bm, b >> 3,
                                  (np.uint8(1) << (b & 7).astype(np.uint8)))
         if any_rows:
             yield pd.DataFrame({"bm": [bm.tobytes()]})
 
-    parts = (seen.select(bucket_col).coalesce(_BUILD_PARTS)
+    parts = (df.coalesce(_BUILD_PARTS)
              .mapInPandas(to_bitmap, "bm binary").collect())
     out = np.zeros(nbytes, np.uint8)
     for r in parts:
         out |= np.frombuffer(r["bm"], np.uint8)
     return out
+
+
+def seen_bitmap(seen: DataFrame, hash_size: int,
+                bucket_col: str = "bucket") -> np.ndarray:
+    """Materialize the seen table as a packed uint8 bitmap."""
+    return or_reduce_bitmap(seen.select(bucket_col), hash_size,
+                            lambda pdf: pdf[bucket_col].to_numpy(np.int64))
 
 
 def with_bitmap_hit(df: DataFrame, bitmap: np.ndarray,

@@ -110,10 +110,15 @@ def assign_global_seq(df: DataFrame, order_cols: List[str],
             if len(pdf):
                 pid = int(pdf["_pid"].iloc[0])
                 if by:
-                    for k, c in pdf.groupby(by[0], sort=False).size().items():
+                    sizes = pdf.groupby(by[0], sort=False,
+                                        dropna=False).size()
+                    for k, c in sizes.items():
                         # numpy scalars -> plain python (hashable,
                         # picklable, and == to the collected-Row value
-                        # the pre-r5 two-job form produced)
+                        # the pre-r5 two-job form produced); a null
+                        # key arrives as NaN/None/NaT and counts as None
+                        if pd.isna(k):
+                            k = None
                         key = (pid, k.item() if hasattr(k, "item") else k)
                         part[key] = part.get(key, 0) + int(c)
                 else:

@@ -397,6 +397,13 @@ def dsir_weights(documents: DataFrame, n_buckets: int = 1024,
     read one materialization — the corpus parquet is scanned ONCE.
     One corpus-sized shuffle total (the per-doc agg), independent
     of vocabulary size.
+
+    The price of scanning once: the checkpoint holds the exploded
+    gram stream, one row per unigram and bigram — O(total corpus
+    tokens), several times the text it saves re-reading. It is a
+    localCheckpoint, so it lives unreplicated on the executors' local
+    storage: losing an executor after the checkpoint fails the job
+    instead of recomputing the lost blocks.
     """
     grams = (documents
              .select("doc_id", "lang", _ws_expr().alias("_ws"))

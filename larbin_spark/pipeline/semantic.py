@@ -249,9 +249,11 @@ def _pq_codes_raw(embeddings: DataFrame, m: int = 4, k: int = 4,
     via the kmeans:assigned probe), the codebook update posexplodes
     to (subspace, cluster, pos) with map-side partial aggregation
     (shuffle payload O(m*k*dim/m) = O(k*dim)), and each iteration
-    eager-checkpoints the m*k rebuilt codebook rows. That is `iters`
-    job barriers TOTAL where the r4 per-subspace loop serialized
-    m*iters barriers (8 for m=4) — the per-subspace math, init
+    checkpoints the m*k rebuilt codebook rows LAZILY: the next
+    iteration's broadcast-build job materializes them, so the Lloyd
+    loop adds no driver barrier of its own, where the r4 per-subspace
+    loop serialized m*iters eager barriers (8 for m=4) — the
+    per-subspace math, init
     (first k vectors by id, per subspace), and tie-breaks are
     bit-identical, so the contract hash is unchanged."""
     from ..operators.sequence import PLAN_PROBE

@@ -2,10 +2,13 @@
 
 Pins the two properties the pre-filter's correctness argument rests
 on (no false negatives; false positives exist so downstream code
-cannot treat maybe_seen as exact) and the prefilter composition's
-equivalence to a plain exact anti-join.
+cannot treat maybe_seen as exact), the prefilter composition's
+equivalence to a plain exact anti-join (also with null keys and an
+empty seen table), the numpy build's agreement with the JVM positions
+relation, and the one-pass shape of the prefilter's plan.
 """
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from larbin_spark.operators import bloomfilter as bf
@@ -72,3 +75,54 @@ def test_probe_handles_empty_batch(spark):
                         "url", M_BITS, K)
     empty = d.filter("url IS NULL")
     assert bf.bloom_probe(empty, bm, "url", M_BITS, K).count() == 0
+
+
+def test_build_bits_equal_positions_relation(spark):
+    """The build expands the k positions in numpy; its set bits must be
+    exactly the JVM positions relation (the DuckDB contract surface),
+    also for a non-power-of-two m."""
+    d = _urls(spark, 400)
+    for m_bits, k in ((M_BITS, K), (1_000_003, 5)):
+        bm = bf.bloom_build(d, "url", m_bits, k)
+        want = {r["pos"] for r in
+                bf.bloom_positions(d, "url", m_bits, k).collect()}
+        got = set(np.flatnonzero(np.unpackbits(bm, bitorder="little")))
+        assert got == want
+
+
+def test_prefilter_null_candidate_keys(spark):
+    """A null candidate key matches no seen key, so it is new; null
+    seen keys set no bits and match nothing."""
+    d = _urls(spark, 200).withColumn(
+        "url", F.when(F.col("url").endswith("7"), None)
+        .otherwise(F.col("url")))
+    seen = d.filter("is_seen").select(F.col("url").alias("u"))
+    rows = bf.bloom_prefilter(d, seen, "url", "u", M_BITS, K).collect()
+    assert len(rows) == 200
+    assert sum(r["url"] is None for r in rows) == 20
+    for r in rows:
+        assert r["is_new"] == (r["url"] is None or not r["is_seen"])
+
+
+def test_prefilter_empty_seen(spark):
+    d = _urls(spark, 100)
+    seen = spark.createDataFrame([], "u string")
+    rows = bf.bloom_prefilter(d, seen, "url", "u", M_BITS, K).collect()
+    assert len(rows) == 100 and all(r["is_new"] for r in rows)
+
+
+def test_prefilter_plan_crosses_python_once(spark):
+    """Over canon_keys_stage the prefilter is one probed frame and one
+    join: no Union re-evaluating the candidates per branch, so the
+    canonicalizer and the probe each appear once in the plan."""
+    from larbin_spark.functions.udfs import canon_keys_stage
+    src = _urls(spark, 100).select(
+        "url", F.monotonically_increasing_id().alias("qseq"))
+    cand = canon_keys_stage(src).withColumn(
+        "key", F.col("bucket").cast("string"))
+    seen = spark.createDataFrame([("1",), ("2",)], "key string")
+    out = bf.bloom_prefilter(cand, seen, "key", "key", M_BITS, K)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("ArrowEvalPython") == 1

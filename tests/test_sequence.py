@@ -91,6 +91,22 @@ def test_counts_out_piggyback(spark):
     assert cnt2 == {"total": 0, "by": {}}
 
 
+def test_counts_out_null_key(spark):
+    """Rows whose counts_by key is null are counted (under None) and
+    get offsets like every other row: the sequence stays the exact
+    dense global rank."""
+    rows = [(i // 3, i % 3, None if i % 4 == 0 else f"q{i % 2}")
+            for i in range(400)]
+    df = spark.createDataFrame(
+        rows, "fetch_seq long, link_idx int, queue string").repartition(5)
+    cnt = {}
+    out = assign_global_seq(df, ["fetch_seq", "link_idx"], "qseq", 3,
+                            counts_by=["queue"], counts_out=cnt)
+    assert cnt["total"] == 400
+    assert cnt["by"] == {None: 100, "q0": 100, "q1": 200}
+    assert sorted(r["qseq"] for r in out.collect()) == list(range(3, 403))
+
+
 # ---------------- assign_group_cumsum ----------------
 
 from larbin_spark.operators.sequence import assign_group_cumsum

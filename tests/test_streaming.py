@@ -2,6 +2,7 @@
 and the watermarked rate aggregation plan."""
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -122,7 +123,18 @@ def test_host_session_tracker_stateful(spark, tmp_path):
     assert df.isStreaming
     q = (df.writeStream.format("memory").queryName("sessions")
          .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    # a processing-time timeout makes every batch ask for another
+    # (no-data) batch, so even availableNow never terminates: wait
+    # for the batch that read the file, then stop the query so it
+    # does not keep running batches behind the tests that follow
+    deadline = time.monotonic() + 120
+    try:
+        while not any(p["numInputRows"] for p in q.recentProgress):
+            assert q.isActive, q.exception()
+            assert time.monotonic() < deadline, "input batch not run"
+            time.sleep(0.2)
+    finally:
+        q.stop()
     rows = {r["host"]: r for r in spark.table("sessions").collect()}
     assert rows["a.com"]["session_urls"] == 2
     assert rows["b.com"]["session_urls"] == 1
