@@ -19,6 +19,8 @@ scalar kernels (which are themselves pinned to the C semantics).
 
 from __future__ import annotations
 
+import re
+from decimal import ROUND_HALF_UP, Decimal
 from typing import List, Optional, Tuple
 
 import numpy as np
@@ -492,3 +494,84 @@ def simhash60_batch(texts: pd.Series, chunk_rows: int = 2048) -> pd.Series:
     res = pd.Series(pd.array(out, dtype="Int64"), index=texts.index)
     res[~notna] = pd.NA
     return res
+
+
+# Java's regex \s (no UNICODE_CHARACTER_CLASS): the whitespace set of
+# the JVM fingerprint's regexp_replace. Python's str \s would also
+# match U+00A0, U+3000 and the other Unicode spaces. Only runs that
+# the replace CHANGES are matched (a lone ' ' maps to itself), so a
+# page of single-spaced words costs no per-word substitution.
+_JAVA_WS_CHANGE = re.compile(r"[ \t\n\x0b\f\r]{2,}|[\t\n\x0b\f\r]")
+_Q4 = Decimal("0.0001")
+
+
+def curation_sigs_batch(texts: pd.Series) -> pd.DataFrame:
+    """The five cheap inline-curation signatures of one Arrow batch of
+    texts — ``n_tokens``, ``quality``, ``pred_lang``, ``pred_score``,
+    ``fingerprint`` — bit-equal to the expression forms
+    (rowsigs.ntokens_expr, textstats.quality_expr /
+    lang_pred_cols, rowsigs.fingerprint_expr):
+
+    - tokens = ``split(text, ' ')`` including empty strings, so
+      ``n_tokens`` is the space count + 1;
+    - a stopword hit is a non-overlapping, case-sensitive
+      ``' w '`` match in ``' ' + text + ' '`` (``str.count`` scans
+      like Spark's ``replace``: "the the the" holds 2);
+    - ``pred_lang`` is the argmax of per-language hit sums in sorted
+      code order, first code on ties;
+    - ``quality`` rounds HALF_UP on the double's shortest decimal
+      form, as Spark's ``round`` does (Python's ``round`` is
+      half-even on the binary value);
+    - ``fingerprint`` lowercases with full Unicode case mapping
+      (Java and Python agree on ``İ`` and a final ``Σ``), collapses
+      Java-``\\s`` runs only, then takes 16 md5 hex chars.
+
+    A NULL text yields what the expressions yield under Spark's
+    default ANSI mode: NULL ``n_tokens``/``pred_score``/
+    ``fingerprint``, ``pred_lang`` 'de' and ``quality`` 1.0 (``least``
+    skips the NULL terms).
+
+    Why this exists: in the JVM the 30 ``replace`` scans and the regex
+    per page cost ~1.1 s per ~600-page round, all in the one task of
+    the docs scan; here they ride the Arrow pass that already runs
+    simhash60_batch. The expression forms remain the contract surface
+    (text_rowsigs); tests/test_rowsigs.py pins this kernel to them.
+    """
+    import hashlib
+
+    from ..pipeline.textstats import LANG_STOPWORDS
+
+    langs = sorted(LANG_STOPWORDS)
+    needles = [[f" {w} " for w in LANG_STOPWORDS[lg]] for lg in langs]
+    en = langs.index("en")
+    n = len(texts)
+    n_tok = [None] * n
+    quality = [1.0] * n
+    pred_lang = [langs[0]] * n
+    pred_score = [None] * n
+    fprint = [None] * n
+    for i, t in enumerate(texts.to_numpy(dtype=object)):
+        if not isinstance(t, str):
+            continue
+        nt = t.count(" ") + 1
+        padded = f" {t} "
+        hits = [sum(padded.count(w) for w in ws) for ws in needles]
+        best = max(range(len(langs)), key=hits.__getitem__)  # first max
+        if nt < 5:
+            q = 0.0
+        else:
+            q = (min(1.0, nt / 200.0) * 0.5
+                 + min(1.0, hits[en] / nt * 5) * 0.5)
+        norm = _JAVA_WS_CHANGE.sub(" ", t.lower())
+        n_tok[i] = nt
+        quality[i] = float(Decimal(repr(q)).quantize(_Q4, ROUND_HALF_UP))
+        pred_lang[i] = langs[best]
+        pred_score[i] = hits[best]
+        fprint[i] = hashlib.md5(norm.encode("utf-8")).hexdigest()[:16]
+    return pd.DataFrame({
+        "n_tokens": pd.array(n_tok, dtype="Int32"),
+        "quality": np.asarray(quality, np.float64),
+        "pred_lang": pred_lang,
+        "pred_score": pd.array(pred_score, dtype="Int32"),
+        "fingerprint": fprint,
+    }, index=texts.index)

@@ -14,18 +14,24 @@ same value the corresponding corpus-pass operator computes:
 - language / quality come from textstats.lang_pred_cols /
   quality_expr, which are already expression-form
 
-Why expression form matters at 100 TB: the agg-based operators each
+Why a per-row form matters at 100 TB: the agg-based operators each
 re-scan the corpus (explode tokens -> shuffle -> groupBy doc).
 Fine for standalone analytics, wrong inside the crawl: the fetched
 pages are already in hand in phase E/F, so curating WHILE crawling
-should cost zero extra scans and zero extra shuffles. These
-expressions fuse into the projection that builds ``docs_out_new`` —
-one whole-stage-codegen pass over data that is already materialized,
-per-row parallel across however many executors hold the pages.
-Everything bottoms out in md5 + exact signed-64 arithmetic, so the
-DuckDB oracle (text_rowsigs) reproduces each value bit-for-bit
-against the EXISTING agg-based SQL — the contract that per-row and
-corpus-pass forms agree.
+should cost zero extra scans and zero extra shuffles. The crawl
+itself does not evaluate these expressions: it runs their
+vectorized kernels (kernels/vectorized.simhash60_batch and
+curation_sigs_batch) in ONE Arrow pass over the successful pages
+(``curation_finalize_fn``). As JVM expressions the five cheap
+signatures cost ~1.1 s per ~600-page round, single-task because the
+docs scan has one or two splits (30 ``replace`` stopword scans per
+~4 KB page plus a regex), and simhash is interpreted-HOF bound.
+The expressions stay the contract surface and the reference the
+kernels are pinned to (tests/test_rowsigs.py): everything bottoms
+out in md5 + exact signed-64 arithmetic, so the DuckDB oracle
+(text_rowsigs) reproduces each value bit-for-bit against the
+EXISTING agg-based SQL — the contract that per-row and corpus-pass
+forms agree.
 
 Parity notes (pinned by tests/test_rowsigs.py):
 - tokens = split(text, ' ') INCLUDING empty strings, exactly
@@ -53,9 +59,8 @@ __all__ = [
     "curation_finalize_fn",
 ]
 
-# column names of curation_cols, in order — the crawl's phase E
-# splices the signatures into its pages checkpoint under prefixed
-# names and phase F selects them back out under these
+# column names of curation_cols, in order — also the signature
+# columns curation_finalize_fn emits
 CURATION_SIG_NAMES = ("n_tokens", "quality", "pred_lang",
                       "pred_score", "simhash", "fingerprint")
 
@@ -150,35 +155,37 @@ def spans_text_expr(spans_col: str = "spans") -> Column:
 
 
 def curation_finalize_fn():
-    """mapInPandas body for the crawl's inline-curation finalize: the
-    five cheap signatures arrive precomputed (JVM expressions in the
-    phase-E checkpoint); this pass appends ``simhash`` via the
-    vectorized kernel (kernels/vectorized.simhash60_batch, bit-equal
-    to simhash_expr — pinned by tests/test_rowsigs.py) and drops the
-    rendered ``_ctext`` so only ids + signatures flow on. Batch-local,
-    no state — safe at any parallelism."""
+    """mapInPandas body for the crawl's inline-curation finalize: takes
+    (round, fetch_seq, doc_id, _ctext) rows of the round's successful
+    pages and emits all six signatures from the rendered ``_ctext`` —
+    simhash via kernels/vectorized.simhash60_batch, the other five via
+    curation_sigs_batch, both bit-equal to the expression forms
+    (pinned by tests/test_rowsigs.py) — dropping ``_ctext`` so only
+    ids + signatures flow on. Batch-local, no state — safe at any
+    parallelism."""
     def fn(batches):
-        from larbin_spark.kernels.vectorized import simhash60_batch
-        order = ["round", "fetch_seq", "doc_id", "n_tokens",
-                 "quality", "pred_lang", "pred_score", "simhash",
-                 "fingerprint"]
+        from larbin_spark.kernels.vectorized import (
+            curation_sigs_batch, simhash60_batch,
+        )
+        order = ["round", "fetch_seq", "doc_id", *CURATION_SIG_NAMES]
         for pdf in batches:
             if not len(pdf):
                 continue
-            out = pdf.drop(columns=["_ctext"]).copy()
-            out["simhash"] = simhash60_batch(pdf["_ctext"])
-            yield out[order]
+            sigs = curation_sigs_batch(pdf["_ctext"])
+            sigs["simhash"] = simhash60_batch(pdf["_ctext"])
+            yield pdf[["round", "fetch_seq", "doc_id"]].join(sigs)[order]
     return fn
 
 
 def curation_from_docs(docs_out_new) -> "DataFrame":
-    """The crawl's inline-curation stage: per-page signature rows
-    (plans/state.CURATION_SCHEMA) for the round's successful fetches.
-    Two chained selects so the rendered text is ONE named column the
-    signature expressions share — Catalyst keeps the projections
-    split rather than duplicating the non-cheap render per signature.
-    No shuffle, no extra scan: a projection over the pages phase E
-    already materialized."""
+    """Expression form of the crawl's inline-curation stage: per-page
+    signature rows (plans/state.CURATION_SCHEMA) for docs_out rows,
+    the post-hoc reference the crawl's kernel pass is pinned to
+    (tests/test_curate_inline.py). Two chained selects so the
+    rendered text is ONE named column the signature expressions
+    share — Catalyst keeps the projections split rather than
+    duplicating the non-cheap render per signature. No shuffle, no
+    extra scan."""
     rendered = docs_out_new.select(
         "round", "fetch_seq", "doc_id",
         spans_text_expr("spans").alias("_ctext"))

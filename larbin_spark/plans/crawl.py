@@ -82,9 +82,12 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
     (save + reload, which rebases the state plans on parquet and
     resets Catalyst size statistics, plans/round.py phase F) still
     happen at every compaction and at least every RELOAD_ROUNDS
-    rounds. Between them the bounded hot tables are
-    localCheckpoint-truncated in memory and the unbounded ones stay
-    lazy O(delta) compositions (_truncate_bounded).
+    rounds. Between them the bounded hot tables (ip_queue, buckets)
+    live on the localCheckpoints run_round takes, overlapped with its
+    phase E, and the unbounded ones (queues, seen, dup_seen) stay
+    lazy compositions over the last reload's parquet plus the
+    rounds' already-checkpointed deltas: materializing those would
+    be O(state) per round, defeating the O(delta) commit design.
     """
     import tempfile
     import time
@@ -183,10 +186,7 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
                     else:
                         _submit_commit(committer, st, store, rnd,
                                        keep_snapshots)
-                        _truncate_bounded(st)
                 committed = rnd
-            else:
-                _truncate_bounded(st)
     except BaseException:
         if committer is not None:
             try:
@@ -244,22 +244,6 @@ def _compaction_due(store: SnapshotStore) -> bool:
     except FileNotFoundError:
         return True
     return any(len(chain) >= COMPACT_EVERY for chain in tables.values())
-
-
-def _truncate_bounded(st: CrawlState) -> None:
-    """In-memory boundary between parquet rebases: materialize +
-    lineage-truncate only the BOUNDED hot tables (in-flight budget /
-    politeness buckets). The unbounded tables — queues, seen,
-    dup_seen — stay lazy compositions over the last reload's parquet
-    plus the rounds' already-checkpointed deltas: materializing the
-    frontier or the seen set into memory would be O(state) per round,
-    defeating the O(delta) commit design, while the lazy form costs
-    one pruned base scan plus <= RELOAD_ROUNDS bounded-probe
-    anti-joins/unions per read (and each table is read at most once
-    or twice per round)."""
-    from .round import _lc
-    for name in ("ip_queue", "buckets"):
-        st.tables[name] = _lc(st.tables[name])
 
 
 def _commit(spark: SparkSession, st: CrawlState, store: SnapshotStore,

@@ -188,41 +188,6 @@ def _lc(df: DataFrame, parts: int = _STATE_PARTITIONS) -> DataFrame:
     return df.coalesce(parts).localCheckpoint(eager=True)
 
 
-def scale_safe_fetch_join(docs: DataFrame, fetched: DataFrame,
-                          materialize=None) -> DataFrame:
-    """Left-outer `fetched |><| documents` without ever broadcasting
-    documents: at crawl scale documents is the LARGEST table and the
-    scheduled batch is bounded (fetch_cap_per_round), so broadcast the
-    batch and stream documents map-side (one scan, runtime-filter/DPP
-    prunable), then recover the outer rows (scheduled URL with no
-    document = connection-failure analogue) from the materialized hit
-    set — both sides of that anti-join are <= |fetched|. The
-    only BroadcastExchange inputs are fetched-side columns
-    (tests/test_fetch_join_plan.py asserts this on the physical plan).
-
-    materialize pins the hit set so the anti-join doesn't re-scan
-    documents (defaults to the round's localCheckpoint).
-
-    NOTE: the production round (_phase_e) inlines the deferred-miss
-    variant of this shape — it checkpoints the hit side once (with
-    all per-page computation riding the same pass, at the docs
-    scan's partitioning, no repartition) and recovers the misses
-    from the checkpoint's bounded url list afterwards. This helper
-    keeps the join-direction contract testable in isolation
-    (tests/test_fetch_join_plan.py) and serves non-round callers."""
-    if materialize is None:
-        materialize = _lc
-    hits = materialize(docs.join(F.broadcast(fetched),
-                                 fetched.url == docs.doc_id, "inner"))
-    null_doc_cols = [F.lit(None).cast(f.dataType).alias(f.name)
-                     for f in docs.schema.fields]
-    miss = (fetched.join(F.broadcast(hits.select("url")),
-                         "url", "left_anti")
-            .select("*", *null_doc_cols))
-    page_cols = [*fetched.columns, *[f.name for f in docs.schema.fields]]
-    return hits.select(*page_cols).unionByName(miss.select(*page_cols))
-
-
 def _defaults_for_new_slots(df: DataFrame) -> DataFrame:
     return df.select(
         "slot_id", F.lit("").alias("name"), F.lit(0).alias("port"),
@@ -734,12 +699,31 @@ class RoundRunner:
         ordering_new = fetched.select(F.lit(rnd).alias("round"),
                                       "fetch_seq", "url", "cookie", "tag")
 
+        # ip_queue and buckets are final here and phase E reads
+        # neither: checkpoint the two bounded tables on a driver
+        # thread, overlapped with phase E, so the commit and the
+        # snapshot save (which writes these checkpoints) never
+        # evaluate their lazy plans. slots stays lazy: checkpointing
+        # it gained nothing measurable and would cost O(slots) per
+        # round at the config-widened slot space (SCALE.md §1).
+        _bnx = ThreadPoolExecutor(max_workers=1)
+        _f_bounded = _bnx.submit(lambda: (_lc(ip_queue), _lc(buckets)))
+
         # ---------- phase E: fetch + parse + link pipeline ----------
-        (queues, seen, seen_delta, dup_seen, dup_delta, log_e,
-         metrics_e, docs_out_new, curation_new, n_links_new, n_success,
-         new_bitmaps, links_enqueued) = self._phase_e(
-            st, fetched, rnd, C["qseq_next"] + n_bounce, queues,
-            mark=_mark)
+        try:
+            (queues, seen, seen_delta, dup_seen, dup_delta, log_e,
+             metrics_e, docs_out_new, curation_new, n_links_new,
+             n_success, new_bitmaps, links_enqueued) = self._phase_e(
+                st, fetched, rnd, C["qseq_next"] + n_bounce, queues,
+                mark=_mark)
+            ip_queue, buckets = _act("E:bounded_join", _f_bounded.result)
+        except BaseException:
+            # same as phase E's own background joins: don't leave the
+            # checkpoint jobs running on a non-daemon thread
+            _f_bounded.cancel()
+            _bnx.shutdown(wait=False)
+            raise
+        _bnx.shutdown()
         C["qseq_next"] += n_bounce + n_links_new
         C["pages_ok"] += n_success
         _mark("E:done")
@@ -767,7 +751,7 @@ class RoundRunner:
         new_tables["docs_out"] = st.tables["docs_out"].unionByName(docs_out_new)
         if cfg.curate:
             # inline curation (pipeline/rowsigs): the signatures were
-            # computed inside phase E's compute-width checkpoint, so
+            # materialized by phase E's compute-width finalize pass, so
             # this union (and the snapshot writer's small-delta
             # coalesce) moves only precomputed values — no extra
             # scan, no shuffle, nothing left for the save to narrow;
@@ -1020,7 +1004,7 @@ class RoundRunner:
             slow_col.alias("d_slow"))
         # ONE payload pass: the docs scan feeds the broadcast fetch
         # join and every per-page computation below (render, content
-        # hash, curation signatures) lands in the phase-E checkpoint
+        # hash) lands in the phase-E checkpoint
         # at the SCAN's partitioning — the fat spans column is stored
         # once and never shuffled. The old shape repartition-
         # materialized the hit set first and ran the dup window over
@@ -1097,46 +1081,16 @@ class RoundRunner:
 
         # checkpoint at COMPUTE width, not state width: ex_in below
         # feeds the link-extraction mapInPandas, whose parallelism is
-        # exactly this frame's partition count
+        # exactly this frame's partition count. No curation signature
+        # rides this checkpoint: it runs at the docs scan's one or two
+        # splits, and as JVM expressions the five cheap signatures
+        # cost ~1.1 s of single-task string scans per ~600 pages. All
+        # six are computed by the vectorized Arrow pass that finalizes
+        # curation_new below.
         pages = pages.withColumn(
             "final_error",
             F.when(F.col("page_class") == "ok", "success")
             .otherwise(F.col("page_class")))
-        if self.cfg.curate:
-            # inline curation computed INSIDE this compute-width
-            # checkpoint. The snapshot writer coalesces small deltas
-            # (sources/catalog.py write_table), and coalesce narrows
-            # its UPSTREAM — a signature projection left lazy for the
-            # save would execute 4-wide no matter how many executors
-            # the cluster has (measured: ~180 s serial tail per
-            # commit window at 2 executors on fat pages). Paying it
-            # here rides the materialization the round already does,
-            # at the round's full parallelism. Failures stay NULL-
-            # cheap: the render is gated to successful pages and
-            # every signature propagates the NULL. (final_error here
-            # is PRE-dup — a page later classed duplicate computes
-            # signatures that the downstream post-dup success filter
-            # then drops; dup pages are a small share and the
-            # alternative is a payload pass after the dup join.)
-            # simhash is NOT
-            # here: its expression form is interpreted-HOF bound
-            # (2.9 core-ms/page measured) — it rides the vectorized
-            # Arrow pass that finalizes curation_new below instead.
-            from ..pipeline.rowsigs import (
-                CURATION_SIG_NAMES, curation_cols, spans_text_expr,
-            )
-            pages = pages.withColumn(
-                "_ctext", F.when(F.col("final_error") == "success",
-                                 spans_text_expr("spans")))
-            # separate select so the rendered text stays ONE shared
-            # column across the signatures (CollapseProject keeps
-            # multi-referenced non-cheap expressions split)
-            pages = pages.select(
-                "*", *[c.alias("_cur_" + n) for n, c in
-                       zip(CURATION_SIG_NAMES,
-                           curation_cols(F.col("_ctext")))
-                       if n != "simhash"]) \
-                .drop("_ctext")
         pages = _act("E:pages_ck",
                      lambda: _lc(self._cap("E_pages", pages), self.width))
         mark("E:pages")
@@ -1250,18 +1204,15 @@ class RoundRunner:
                                     "doc_id", "spans", "tag"))
             curation_new = None
             if self.cfg.curate:
-                # five signatures are a free column select (computed in
-                # the pages checkpoint above); simhash is appended by the
-                # vectorized Arrow kernel (kernels/vectorized.py
-                # simhash60_batch — factorize + bincount + BLAS, 20x the
-                # expression form) over a re-render of the success rows.
-                # Materialized EAGERLY at compute width: curation_new
-                # feeds the snapshot save, whose small-delta coalesce
-                # would otherwise narrow this mapInPandas to 4 workers
-                # regardless of cluster size.
+                # all six signatures come from ONE vectorized Arrow pass
+                # over a render of the success rows (kernels/vectorized
+                # simhash60_batch + curation_sigs_batch, bit-equal to
+                # the rowsigs expression forms). Materialized EAGERLY at
+                # compute width: curation_new feeds the snapshot save,
+                # whose small-delta coalesce would otherwise narrow this
+                # mapInPandas to 4 workers regardless of cluster size.
                 from ..pipeline.rowsigs import (
-                    CURATION_SIG_NAMES, curation_finalize_fn,
-                    spans_text_expr,
+                    curation_finalize_fn, spans_text_expr,
                 )
                 from .state import CURATION_SCHEMA
                 # read the HIT side of the checkpoint directly: misses
@@ -1278,14 +1229,9 @@ class RoundRunner:
                         "fetch_seq", "left")
                         .filter(~(F.coalesce("dup_seen_hit", F.lit(False))
                                   | (F.coalesce("dup_rn", F.lit(1)) > 1))))
-                cur_base = (
-                    cur_src
-                    .select(F.lit(rnd).alias("round"), "fetch_seq",
-                            "doc_id",
-                            *[F.col("_cur_" + n).alias(n)
-                              for n in CURATION_SIG_NAMES
-                              if n != "simhash"],
-                            spans_text_expr("spans").alias("_ctext")))
+                cur_base = cur_src.select(
+                    F.lit(rnd).alias("round"), "fetch_seq", "doc_id",
+                    spans_text_expr("spans").alias("_ctext"))
                 # materialize on a driver thread, OVERLAPPED with the
                 # link/gate chain below: curation_new and the links
                 # checkpoint both read only already-materialized frames
@@ -1324,9 +1270,6 @@ class RoundRunner:
                         (F.col("final_error") == "err30X").alias("redir_row"))
 
             def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                import os as _os, sys as _sys, time as _time
-                _dbg = _os.environ.get("SPARK_GRAFT_DEBUG_E")
-                _te0, _np = _time.time(), 0
                 from ..kernels.urlnorm import merge_cookie
                 cols = [f.name for f in LINKS_SCHEMA]
                 for pdf in batches:
@@ -1364,11 +1307,7 @@ class RoundRunner:
                                 out.append((row.fetch_seq, i, u.host,
                                             u.port, u.path, u.depth, False,
                                             row.host, lc, 0))
-                    _np += len(pdf)
                     yield pd.DataFrame(out, columns=cols)
-                if _dbg:
-                    print(f"[extract-part] {_time.time() - _te0:.2f}s "
-                          f"{_np} pages", file=_sys.stderr, flush=True)
 
             links = ex_in.mapInPandas(extract, LINKS_SCHEMA)
 

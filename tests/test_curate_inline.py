@@ -1,11 +1,13 @@
 """Inline curation (cfg.curate): phase F records per-page rowsig
 signatures for every successful fetch into the grow-only `curation`
-table. Correctness pin: the inline (during-crawl, incremental) rows
-must equal a post-hoc second pass of the same expressions over the
-final docs_out table — curate-while-crawling changes WHEN the
-signatures are computed, never their values. Cross-engine value
-parity of the expressions themselves is the text_rowsigs contract
-query; rowsig-vs-agg-operator parity is tests/test_rowsigs.py."""
+table. Correctness pin: the inline (during-crawl, incremental) rows —
+computed by the vectorized kernels in phase E's one Arrow finalize
+pass — must equal a post-hoc second pass of the expression forms
+over the final docs_out table: curate-while-crawling changes WHEN and
+HOW the signatures are computed, never their values. Cross-engine
+value parity of the expressions themselves is the text_rowsigs
+contract query; rowsig-vs-agg-operator and kernel-vs-expression
+parity are tests/test_rowsigs.py."""
 
 import os
 

@@ -24,13 +24,27 @@ def docs(spark):
             .select("doc_id", "text").limit(200).cache())
 
 
+# 32 tokens, 6 English stopword hits: quality 0.54875 before rounding,
+# a 5th-decimal tie that Spark's HALF_UP takes to 0.5488 (Python's
+# round gives 0.5487)
+_QUALITY_TIE = "the a and a of a to a in a the " + " ".join(["w"] * 21)
+
+
 def _edge_docs(spark):
     return spark.createDataFrame(
         [(1, "one two three four five"),
          (2, "one two"),            # < 3 tokens: no shingle
          (3, ""),                   # empty text -> one empty token
          (4, "a  b"),               # doubled space -> empty token
-         (5, "one one one one")],   # repeated shingles
+         (5, "one one one one"),    # repeated shingles
+         (6, "the the the"),        # 2 non-overlapping ' the ' hits
+         # Java's regex \s runs vs U+00A0 / U+3000 (Unicode spaces
+         # Java's \s does not match but Python's does)
+         (7, "\t\n\x0b\x0c\r a \t\n b\u00a0\u00a0c\u3000d  e"),
+         # non-ASCII case folding: dotted capital I (lowercases to
+         # two chars), final and lone sigma, CJK stopwords
+         (8, "İstanbul ΟΔΟΣ Σ ΑΣ. 的 是 的 我"),
+         (9, _QUALITY_TIE)],
         "doc_id long, text string")
 
 
@@ -110,3 +124,34 @@ def test_simhash_kernel_matches_expr(spark, docs):
                 assert g == expr[r["doc_id"]], (chunk, r["doc_id"])
     # None text -> NA (expression form yields NULL)
     assert simhash60_batch(pd.Series([None], dtype=object))[0] is pd.NA
+
+
+def test_curation_sigs_kernel_matches_expr(spark, docs):
+    """The vectorized kernel for the five cheap signatures (the crawl's
+    inline-curation path) must be bit-equal to the expression forms on
+    real documents, on the edge cases (consecutive stopwords, < 5
+    tokens, empty text, Java-vs-Unicode whitespace, non-ASCII case
+    folding, a HALF_UP quality tie) and on a NULL text."""
+    import pandas as pd
+
+    from larbin_spark.kernels.vectorized import curation_sigs_batch
+
+    names = ["n_tokens", "quality", "pred_lang", "pred_score",
+             "fingerprint"]
+    null_doc = spark.createDataFrame([(0, None)], "doc_id long, text string")
+    for frame in (docs, _edge_docs(spark), null_doc):
+        rows = frame.select("doc_id", "text",
+                            *rowsigs.curation_cols(F.col("text"))).collect()
+        got = curation_sigs_batch(
+            pd.Series([r["text"] for r in rows], dtype=object))
+        assert list(got.columns) == names
+        for r, g in zip(rows, got.itertuples(index=False)):
+            have = tuple(None if v is pd.NA else v for v in g)
+            want = tuple(r[n] for n in names)
+            assert have == want, (r["doc_id"], have, want)
+    # the edge cases hold what they claim
+    by_id = {r["doc_id"]: r for r in _edge_docs(spark).select(
+        "doc_id", *rowsigs.curation_cols(F.col("text"))).collect()}
+    assert (by_id[6]["pred_lang"], by_id[6]["pred_score"]) == ("en", 2)
+    assert by_id[8]["pred_lang"] == "zh"
+    assert by_id[9]["quality"] == 0.5488 and round(0.54875, 4) == 0.5487

@@ -717,11 +717,12 @@ CRAWL_CHECKS = {
          lambda p: "filter(spans" in p and "anchor" in p),
     ],
     "E_curation": [
-        # inline curation (r4): five signatures ride the phase-E
-        # checkpoint as JVM expressions; simhash rides the vectorized
-        # Arrow kernel. The whole finalize must be a pure projection
-        # + one MapInPandas over the checkpointed pages — no shuffle,
-        # no row-at-a-time Python, no join.
+        # inline curation: all six signatures ride one vectorized
+        # Arrow pass (the JVM-expression form of the five cheap ones
+        # cost ~1.1 s of single-task string scans per ~600 pages in
+        # the phase-E checkpoint). The whole finalize must be a pure
+        # projection + one MapInPandas over the checkpointed pages —
+        # no shuffle, no row-at-a-time Python, no join.
         ("curation finalize is one Arrow pass (MapInPandas), no "
          "row-at-a-time Python",
          lambda p: len(_tree_nodes(p, "MapInPandas")) == 1
@@ -801,8 +802,7 @@ def audit_crawl_round(spark, out: list) -> int:
                                       key=lambda s: s["order"])]
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     # curate=True so the audited round is the FULL product shape:
-    # phase E's checkpoint carries the five signature expressions and
-    # the E_curation probe (Arrow simhash finalize) exists;
+    # the E_curation probe (the Arrow signature finalize) exists;
     # page_no_duplicate=True so the projected-keys dup stage
     # (E_dupkeys) exists and its scale properties are asserted
     runner = RoundRunner(spark, CrawlConfig(curate=True,
