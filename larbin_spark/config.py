@@ -9,7 +9,7 @@ docs/ROUND_MODEL.md for the mapping and its justification).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, field
 from typing import List, Optional
 
 from .kernels.urlfilter import DEFAULT_FORBIDDEN_EXTENSIONS
@@ -102,43 +102,3 @@ class CrawlConfig:
                                      # the reference stops mid-flight; the
                                      # round model stops before the next
                                      # round, the nearest safe point)
-
-    # seen-membership probe strategy (operators/membership.py): when
-    # True and hash_size fits a broadcast (8 MB at the reference's
-    # 64M), the per-round URL-seen probe is a broadcast-bitmap bit
-    # test instead of a join against the seen table. Identical
-    # semantics (bit set <-> bucket in seen); parity tests run both.
-    seen_bitmap_broadcast: bool = False
-
-    # widest bucket space the broadcast-bitmap probe is allowed to
-    # carry: 2^33 buckets = 1 GiB of packed bits per executor — the
-    # practical broadcast ceiling. Beyond it (SCALE.md §1 sizes the
-    # 10^10 frontier at hash_size 2^40 = 128 GiB) the bitmap cannot
-    # ride a broadcast; the exact range-sharded seen-table anti-join
-    # is the path (a shard-per-executor bitmap would be the
-    # engine-level alternative, not implemented here).
-    MAX_BITMAP_BROADCAST_BUCKETS = 1 << 33
-
-    def __post_init__(self) -> None:
-        # the dup bitmap only exists when the content-dup gate is on
-        # (plans/round.py builds bitmaps['dup_seen'] inside the
-        # page_no_duplicate branch), so dup_size only constrains the
-        # broadcast path in that case
-        widest = max(self.hash_size,
-                     self.dup_size if self.page_no_duplicate else 0)
-        if self.seen_bitmap_broadcast and (
-                widest > self.MAX_BITMAP_BROADCAST_BUCKETS):
-            raise ValueError(
-                "seen_bitmap_broadcast=True needs hash_size (and "
-                "dup_size when page_no_duplicate=True) <= 2^33 "
-                f"buckets (1 GiB of bits); got "
-                f"hash_size={self.hash_size}, dup_size={self.dup_size}. "
-                "Use the range-sharded seen-table join at scale-out "
-                "bucket spaces (operators/membership.py docstring).")
-
-    def to_dict(self) -> dict:
-        return asdict(self)
-
-    @classmethod
-    def from_dict(cls, d: dict) -> "CrawlConfig":
-        return cls(**d)

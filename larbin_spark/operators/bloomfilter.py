@@ -36,19 +36,50 @@ build (each partition ORs its keys into a local bitmap, the driver
 ORs the partials — associative, commutative, one pass) is exactly
 the merge a Bloom bitmap supports for free.
 
-Build is distributed and reuses the membership OR-reduce; the probe
-is one Arrow-vectorized numpy pass per batch over two int64 columns
-(no per-row Python).
+Build is distributed: each partition ORs its keys' bit positions
+into a local numpy bitmap and the driver ORs the partials
+(or_reduce_bitmap); the probe is one Arrow-vectorized numpy pass per
+batch over two int64 columns (no per-row Python).
 """
 
 from __future__ import annotations
 
-from typing import List, Tuple
+from typing import Callable, List, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+_BUILD_PARTS = 8  # bitmaps transferred to the driver = parts * size/8
+
+
+def or_reduce_bitmap(df: DataFrame, n_bits: int,
+                     positions: Callable[[pd.DataFrame], np.ndarray]
+                     ) -> np.ndarray:
+    """Packed uint8 bitmap of every bit `positions(batch)` (int64)
+    names over df's Arrow batches: each partition ORs into a local
+    bitmap, the driver ORs the partials. One job, no shuffle."""
+    nbytes = (n_bits + 7) // 8
+
+    def to_bitmap(batches):
+        bm = np.zeros(nbytes, np.uint8)
+        any_rows = False
+        for pdf in batches:
+            if len(pdf):
+                any_rows = True
+                b = positions(pdf)
+                np.bitwise_or.at(bm, b >> 3,
+                                 (np.uint8(1) << (b & 7).astype(np.uint8)))
+        if any_rows:
+            yield pd.DataFrame({"bm": [bm.tobytes()]})
+
+    parts = (df.coalesce(_BUILD_PARTS)
+             .mapInPandas(to_bitmap, "bm binary").collect())
+    out = np.zeros(nbytes, np.uint8)
+    for r in parts:
+        out |= np.frombuffer(r["bm"], np.uint8)
+    return out
 
 
 def _double_hash(hx: Column, m_bits: int) -> Tuple[Column, Column]:
@@ -105,11 +136,9 @@ def bloom_positions(df: DataFrame, col: str, m_bits: int,
 def bloom_build(df: DataFrame, col: str, m_bits: int,
                 k: int) -> np.ndarray:
     """Distributed Bloom build: (h1 mod m, h2 mod m) projected
-    JVM-side, the k positions expanded in numpy inside the same
-    per-partition OR-reduce as the exact membership bitmap
-    (operators/membership.py) — one pass, no shuffle. Null keys set
-    no bits."""
-    from .membership import or_reduce_bitmap
+    JVM-side, the k positions expanded in numpy inside the
+    per-partition OR-reduce (or_reduce_bitmap) — one pass, no
+    shuffle. Null keys set no bits."""
     pairs = _with_hash_pair(df.where(F.col(col).isNotNull()), col,
                             m_bits).select("_h1", "_h2")
     return or_reduce_bitmap(

@@ -204,9 +204,7 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
         # async path: rebase the returned state onto the durable
         # snapshot — its lazy table plans must not outlive prune's
         # data-dir expiry once the caller holds it past more commits
-        bitmaps = st.bitmaps
         st = CrawlState.load(spark, store, rnd)
-        st.bitmaps = bitmaps
     return st
 
 
@@ -250,15 +248,11 @@ def _commit(spark: SparkSession, st: CrawlState, store: SnapshotStore,
             rnd: int, keep_snapshots: int) -> CrawlState:
     """Durable snapshot boundary: write the accumulated deltas, then
     reload so Catalyst's size statistics reset to real file sizes
-    (plans/round.py phase F). The bitmap cache is exactly the
-    seen/dup_seen content of the snapshot just committed, so it
-    survives the reload (a fresh resume starts cold and rebuilds)."""
+    (plans/round.py phase F)."""
     from .round import _act
     _act("F:commit_sync_save", lambda: st.save(store, rnd))
-    bitmaps = st.bitmaps
     st = _act("F:commit_reload",
               lambda: CrawlState.load(spark, store, rnd))
-    st.bitmaps = bitmaps
     store.prune(keep_last=keep_snapshots)
     return st
 

@@ -25,8 +25,8 @@ for per-round new links — uses the two-phase distributed rank
 (operators/sequence.py) under the same (fetch_seq, link_idx) order.
 The heavy stages (slot routing, link extraction, seen anti-join,
 fetch join) shuffle on slot_id / bucket / range and scale out; the
-documents dim and the growing dup_seen set are never broadcast
-(only the bounded scheduled batch and the fixed-size bitmaps are).
+documents dim and the growing seen / dup_seen sets are never
+broadcast (only bounded frames, such as the scheduled batch, are).
 """
 
 from __future__ import annotations
@@ -341,22 +341,12 @@ class RoundRunner:
         new_tables["queues"] = st.queues.unionByName(qdf)
         deltas["queues_add"] = (deltas["queues_add"].unionByName(qdf)
                                 if "queues_add" in deltas else qdf)
-        bitmaps = dict(st.bitmaps)
         if new_buckets:
             bdf = spark.createDataFrame(new_buckets, SEEN_SCHEMA)
             new_tables["seen"] = st.seen.unionByName(bdf)
             deltas["seen"] = (deltas["seen"].unionByName(bdf)
                               if "seen" in deltas else bdf)
-            if "seen" in bitmaps:
-                # keep the carried membership bitmap consistent with
-                # the table (driver-side OR; |subs| is bounded)
-                import numpy as np
-                bm = bitmaps["seen"].copy()
-                b = np.array([x[0] for x in new_buckets], np.int64)
-                np.bitwise_or.at(bm, b >> 3,
-                                 (np.uint8(1) << (b & 7).astype(np.uint8)))
-                bitmaps["seen"] = bm
-        return CrawlState(new_tables, st.counters, deltas, bitmaps)
+        return CrawlState(new_tables, st.counters, deltas)
 
     # ---------------- the round ----------------
 
@@ -713,7 +703,7 @@ class RoundRunner:
         try:
             (queues, seen, seen_delta, dup_seen, dup_delta, log_e,
              metrics_e, docs_out_new, curation_new, n_links_new,
-             n_success, new_bitmaps, links_enqueued) = self._phase_e(
+             n_success, links_enqueued) = self._phase_e(
                 st, fetched, rnd, C["qseq_next"] + n_bounce, queues,
                 mark=_mark)
             ip_queue, buckets = _act("E:bounded_join", _f_bounded.result)
@@ -784,7 +774,7 @@ class RoundRunner:
             _acc("curation", curation_new)
         C["round"] = rnd + 1
         _mark("F:commit")
-        return CrawlState(new_tables, C, deltas, new_bitmaps)
+        return CrawlState(new_tables, C, deltas)
 
     # ---------------- phase C ----------------
 
@@ -1120,32 +1110,16 @@ class RoundRunner:
         # the first-occurrence window and the dup_seen probe read a
         # (fetch_seq, c_bucket) projection of the checkpoint — never
         # the payload. dup_seen GROWS without bound and must never be
-        # broadcast as a table: probe it through the fixed-size
-        # (dup_size bits) bitmap when the config allows the 8 MB
-        # broadcast, else a plain (AQE-planned) join on the slim keys
-        # — same split as the URL-seen probe below. The bounded
+        # broadcast: it is probed by a plain (AQE-planned) left join
+        # on the slim keys, like the URL-seen probe below. The bounded
         # per-round verdict frame is then broadcast back onto pages.
-        new_bitmaps: dict = {}
         if cfg.page_no_duplicate:
             dk = (pages_ck.select("fetch_seq", "c_bucket")
                   .filter(F.col("c_bucket").isNotNull()))
-            if cfg.seen_bitmap_broadcast:
-                from ..operators.membership import (
-                    seen_bitmap, with_bitmap_hit,
-                )
-                # cached bitmap from the previous round (OR-maintained
-                # below) — rebuild from the table only on a cold state
-                # (bootstrap / resume), never every round
-                dup_bm = st.bitmaps.get("dup_seen")
-                if dup_bm is None:
-                    dup_bm = seen_bitmap(st.dup_seen, cfg.dup_size)
-                dk = with_bitmap_hit(dk, dup_bm, "c_bucket",
-                                     "dup_seen_hit")
-            else:
-                dup_hit = (st.dup_seen
-                           .select(F.col("bucket").alias("c_bucket"))
-                           .withColumn("dup_seen_hit", F.lit(True)))
-                dk = dk.join(dup_hit, "c_bucket", "left")
+            dup_hit = (st.dup_seen
+                       .select(F.col("bucket").alias("c_bucket"))
+                       .withColumn("dup_seen_hit", F.lit(True)))
+            dk = dk.join(dup_hit, "c_bucket", "left")
             wdup = Window.partitionBy("c_bucket").orderBy("fetch_seq")
             dk = dk.withColumn("dup_rn", F.row_number().over(wdup))
             dup_ck = _act("E:dupkeys_ck",
@@ -1175,12 +1149,6 @@ class RoundRunner:
                 & ~F.coalesce("dup_seen_hit", F.lit(False)))
                 .select(F.col("c_bucket").alias("bucket")))
             dup_seen = st.dup_seen.unionByName(dup_new)
-            if cfg.seen_bitmap_broadcast:
-                from ..operators.membership import seen_bitmap as _sbm
-                # O(delta) maintenance: OR only this round's new
-                # buckets into the carried bitmap
-                new_bitmaps["dup_seen"] = dup_bm | _sbm(dup_new,
-                                                        cfg.dup_size)
         else:
             from .state import SEEN_SCHEMA as _SEEN
             dup_new = spark.createDataFrame([], _SEEN)
@@ -1337,7 +1305,7 @@ class RoundRunner:
             links = links.withColumn(
                 "l_slot_id",
                 site_hash_udf("l_host", F.lit(cfg.named_site_list_size)))
-            slots_now = self._slots_for_fastfail
+            slots_now = self._fastfail_slots
             # SCALE: never FORCE-broadcast the slot table onto the link
             # stream — at the widened ~10^8-slot space that is a ~10 GB
             # exchange per round. Unhinted, the planner broadcasts only
@@ -1390,20 +1358,10 @@ class RoundRunner:
                                          F.lit(cfg.hash_size)))
             wdedup = Window.partitionBy("bucket").orderBy("fetch_seq", "link_idx")
             survivors = survivors.withColumn("brn", F.row_number().over(wdedup))
-            if cfg.seen_bitmap_broadcast:
-                # map-side bit test against the broadcast bitmap — same
-                # semantics as the join (membership.py docstring), no
-                # shuffle of the candidate set against seen
-                from ..operators.membership import seen_bitmap, with_bitmap_hit
-                bm = st.bitmaps.get("seen")
-                if bm is None:  # cold state (bootstrap / resume) only
-                    bm = seen_bitmap(st.seen, cfg.hash_size)
-                survivors = with_bitmap_hit(survivors, bm, "bucket", "seen_hit")
-            else:
-                seen_hit = st.seen.withColumn("seen_hit", F.lit(True))
-                survivors = (survivors.join(seen_hit, "bucket", "left")
-                             .withColumn("seen_hit",
-                                         F.coalesce("seen_hit", F.lit(False))))
+            seen_hit = st.seen.withColumn("seen_hit", F.lit(True))
+            survivors = (survivors.join(seen_hit, "bucket", "left")
+                         .withColumn("seen_hit",
+                                     F.coalesce("seen_hit", F.lit(False))))
             survivors = _act("E:survivors_ck", lambda: _lc(self._cap(
                 "E_survivors", survivors.withColumn(
                     "is_dup", (F.col("brn") > 1) | F.col("seen_hit")))))
@@ -1474,11 +1432,6 @@ class RoundRunner:
         queues = queues.unionByName(new_rows)
         seen_delta = novel.select("bucket")
         seen = st.seen.unionByName(seen_delta)
-        if cfg.seen_bitmap_broadcast:
-            # O(delta) bitmap maintenance (scan of the checkpointed
-            # survivors only, never the full seen table)
-            new_bitmaps["seen"] = bm | seen_bitmap(seen_delta,
-                                                   cfg.hash_size)
 
         # ---- metrics / lineage (O-19) ----
         gate_errors = links.filter(F.col("gate_err").isNotNull()) \
@@ -1498,11 +1451,7 @@ class RoundRunner:
 
         return (queues, seen, seen_delta, dup_seen, dup_new,
                 log_e_pages, metrics_e, docs_out_new, curation_new,
-                n_links_new, n_success, new_bitmaps, new_rows)
-
-    @property
-    def _slots_for_fastfail(self) -> DataFrame:
-        return self._fastfail_slots
+                n_links_new, n_success, new_rows)
 
     def set_fastfail_slots(self, slots: DataFrame) -> None:
         self._fastfail_slots = slots.select(

@@ -173,14 +173,6 @@ class CrawlState:
     # frontier. Consumed by save(), reset by load(). BOTH queues_*
     # keys must be present for a delta commit (else full write).
     deltas: Dict[str, DataFrame] = field(default_factory=dict)
-    # in-memory membership bitmap cache for the opt-in
-    # seen_bitmap_broadcast path (operators/membership.py): the packed
-    # bitmaps of `seen` / `dup_seen` as of this state. Maintained by
-    # OR-ing each round's delta (O(delta) scan) instead of re-scanning
-    # the full tables every round (VERDICT r2 minor). NOT persisted:
-    # load() leaves it empty and the next round rebuilds from the
-    # authoritative tables, so a stale cache cannot survive a resume.
-    bitmaps: Dict[str, object] = field(default_factory=dict)
 
     def __getattr__(self, item):
         try:

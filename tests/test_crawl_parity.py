@@ -99,15 +99,6 @@ def test_metrics_lineage_populated(spark_result):
     assert parts >= 1
 
 
-def test_bitmap_probe_matches_join_probe(spark, dims, seeds, spark_result):
-    """cfg.seen_bitmap_broadcast swaps the URL-seen probe from an
-    anti-join to a broadcast-bitmap bit test; crawl results must be
-    byte-identical."""
-    cfg = CrawlConfig(seen_bitmap_broadcast=True)
-    st = run_crawl(spark, cfg, dims, list(seeds), max_rounds=ROUNDS)
-    assert collect_results(st) == spark_result[0]
-
-
 def test_timeout_taxonomy_nonvacuous(oracle_result):
     """The fixture must actually exercise the timeout FetchError
     (types.h:114): slow servers exist and get scheduled within the

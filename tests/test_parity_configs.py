@@ -16,11 +16,6 @@ ROUNDS = int(os.environ.get("SPARK_GRAFT_PARITY_CFG_ROUNDS", "5"))
 
 CONFIGS = {
     "content_dedup": dict(page_no_duplicate=True, any_type=True),
-    # dup_seen probed through the carried broadcast bitmap, OR-updated
-    # with each round's delta (operators/membership.py + CrawlState
-    # .bitmaps) — must match the join path across a multi-round crawl
-    "content_dedup_bitmap": dict(page_no_duplicate=True, any_type=True,
-                                 seen_bitmap_broadcast=True),
     "lock_site": dict(lock_site=True),
     "depth_by_site": dict(depth_by_site=True),
     "specific_search": dict(specific_search=True,

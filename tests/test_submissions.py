@@ -128,19 +128,6 @@ def test_redirect_inherits_tag(spark):
     assert by_url["http://a.com/u.html"] == 0     # extracted link: 0
 
 
-def test_bitmap_path_matches_join_path(spark, dims, seeds, fixture_web,
-                                       results):
-    """Submissions mid-crawl with seen_bitmap_broadcast=True: submit()
-    must OR its force-set buckets into the CARRIED bitmap (CrawlState
-    .bitmaps), so the next round's membership probe sees them — the
-    whole run must equal the join-path result byte-for-byte."""
-    subs = _submissions(fixture_web)
-    cfg = CrawlConfig(seen_bitmap_broadcast=True)
-    st = run_crawl(spark, cfg, dims, list(seeds), max_rounds=ROUNDS,
-                   submissions=subs)
-    assert collect_results(st) == results[0]
-
-
 def test_large_submission_batch(spark, dims, seeds, fixture_web):
     """The submit() seen-probe is a broadcast semi-join, not an
     isin() literal — a 10^4-row batch must neither blow up the
