@@ -17,7 +17,6 @@ import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..kernels.hashes import content_hash
 from ..kernels.robots import is_allowed
 from ..kernels.urlfilter import filter1
 from ..kernels.urlnorm import parse_url
@@ -85,12 +84,6 @@ def site_hash_udf(host: pd.Series, size: pd.Series) -> pd.Series:
     if not len(host):  # Arrow may hand a zero-row batch
         return pd.Series([], dtype="int32")
     return pd.Series(site_hash_np(host, int(size.iloc[0])), dtype="int32")
-
-
-@pandas_udf(T.LongType())
-def content_bucket_udf(text: pd.Series, dup_size: pd.Series) -> pd.Series:
-    return pd.Series([content_hash(t or "", int(s))
-                      for t, s in zip(text, dup_size)], dtype="int64")
 
 
 @pandas_udf(T.BooleanType())

@@ -31,7 +31,7 @@ broadcast (only bounded frames, such as the scheduled batch, are).
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, Tuple
+from typing import Dict, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,10 +39,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import CrawlConfig
-from ..functions.udfs import (
-    filter1_udf, robots_allowed_udf, site_hash_udf, url_bucket_udf,
-)
+from ..functions.udfs import robots_allowed_udf, site_hash_udf
 from ..kernels.links import clean_redirect_text, extract_links
+from ..kernels.urlfilter import filter1
 from ..kernels.urlnorm import ParsedUrl, give_base, parse_url, punycode_host
 from ..operators import slot_logic
 from .state import (
@@ -86,6 +85,11 @@ RESOLVED_SCHEMA = T.StructType(
 # roughly double the string mass of every phase-E barrier for zero
 # information. It is re-derived JVM-side (one concat) only where the
 # QUEUE_SCHEMA needs it, after the rank.
+#
+# The extract pass also emits the two integer keys the rest of phase E
+# needs — l_slot_id (siteHashCode, the fast-fail slot join key) and
+# bucket (url::hashCode, the seen-set key) — so the link chain crosses
+# into Python once instead of once per key UDF.
 LINKS_SCHEMA = T.StructType([
     T.StructField("fetch_seq", T.LongType()),
     T.StructField("link_idx", T.IntegerType()),
@@ -97,6 +101,8 @@ LINKS_SCHEMA = T.StructType([
     T.StructField("parent_host", T.StringType()),
     T.StructField("l_cookie", T.StringType()),
     T.StructField("l_tag", T.IntegerType()),
+    T.StructField("l_slot_id", T.IntegerType()),
+    T.StructField("bucket", T.LongType()),
 ])
 
 
@@ -127,11 +133,14 @@ def _apply_per_slot(df: DataFrame, bucket_fn, schema) -> DataFrame:
     lands in the same pandas call) and run `bucket_fn` once per bucket;
     it iterates the slots internally via `_slot_spans` over a single
     (slot_id, order)-sorted frame, so both the Arrow constant AND the
-    pandas constant are paid per bucket (~128), never per slot. Bucket
-    count only shapes parallelism, never results.
+    pandas constant are paid per bucket, never per slot.
+
+    One bucket per core (defaultParallelism): more buckets add no
+    parallelism, and on a small round AQE coalesces the shuffle to one
+    task, which then runs every bucket's pandas call back to back.
+    Bucket count only shapes parallelism, never results.
     """
-    n_buckets = max(
-        64, df.sparkSession.sparkContext.defaultParallelism * 4)
+    n_buckets = df.sparkSession.sparkContext.defaultParallelism
     bucketed = df.withColumn(
         "_slot_bucket",
         F.pmod(F.col("slot_id"), F.lit(n_buckets)).cast("int"))
@@ -1069,14 +1078,16 @@ class RoundRunner:
                 F.when(F.col("page_class") == "ok",
                        content_bucket_udf(rendered)))
 
-        # checkpoint at COMPUTE width, not state width: ex_in below
-        # feeds the link-extraction mapInPandas, whose parallelism is
-        # exactly this frame's partition count. No curation signature
-        # rides this checkpoint: it runs at the docs scan's one or two
-        # splits, and as JVM expressions the five cheap signatures
-        # cost ~1.1 s of single-task string scans per ~600 pages. All
-        # six are computed by the vectorized Arrow pass that finalizes
-        # curation_new below.
+        # coalesce to COMPUTE width, not state width: that caps the
+        # partition count but cannot raise it, so this checkpoint — and
+        # ex_in below, the link-extraction mapInPandas — runs at the
+        # docs scan's splits (one or two on a small documents file).
+        # Raising it would take a payload shuffle, which measured slower
+        # at crawl_bulk sizes (docs/SCALE.md §6). No curation signature
+        # rides this checkpoint: as JVM expressions the five cheap
+        # signatures cost ~1.1 s of single-task string scans per ~600
+        # pages. All six are computed by the vectorized Arrow pass that
+        # finalizes curation_new below.
         pages = pages.withColumn(
             "final_error",
             F.when(F.col("page_class") == "ok", "success")
@@ -1237,9 +1248,20 @@ class RoundRunner:
                         "redirect_to", "cookie", "set_cookie", "tag",
                         (F.col("final_error") == "err30X").alias("redir_row"))
 
+            # manageUrl's filter1 (file.cxx:329-357) and the two hash
+            # keys run in this same pass. filter1 gets the config's
+            # lists unchanged, as the oracle does: None (no domain gate /
+            # the default extension list) differs from [] (no domain
+            # passes / nothing is forbidden).
+            domains, exts = cfg.domains, cfg.forbidden_extensions
+            site_size, hash_size = cfg.named_site_list_size, cfg.hash_size
+
             def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 from ..kernels.urlnorm import merge_cookie
-                cols = [f.name for f in LINKS_SCHEMA]
+                from ..kernels.vectorized import site_hash_np, url_hash_np
+                # per-link tuples fill all but the two hash keys, which
+                # are added per batch
+                cols = LINKS_SCHEMA.names[:-2]
                 for pdf in batches:
                     out = []
                     for row in pdf.itertuples(index=False):
@@ -1253,7 +1275,8 @@ class RoundRunner:
                                 row.redirect_to or "", get_cgi)
                             u = (parse_url(cleaned, page.depth, give_base(page))
                                  if cleaned else None)
-                            if u is not None:
+                            if u is not None and filter1(
+                                    u.host, u.path, domains, exts):
                                 lc = pc if (use_cookies
                                             and u.host == row.host) else None
                                 # redirects inherit the page tag
@@ -1266,8 +1289,12 @@ class RoundRunner:
                                   if use_cookies else None)
                             tup = [(d["kind"], d["text"], d["media_ref"],
                                     d["offset"]) for d in row.spans]
+                            # link_idx is the index among ALL extracted
+                            # links, filtered or not (the rank order)
                             for i, u in enumerate(extract_links(
                                     tup, page, get_image, get_cgi)):
+                                if not filter1(u.host, u.path, domains, exts):
+                                    continue
                                 lc = pc if (use_cookies
                                             and u.host == row.host) else None
                                 # extracted links get the ctor default
@@ -1275,15 +1302,15 @@ class RoundRunner:
                                 out.append((row.fetch_seq, i, u.host,
                                             u.port, u.path, u.depth, False,
                                             row.host, lc, 0))
-                    yield pd.DataFrame(out, columns=cols)
+                    ldf = pd.DataFrame(out, columns=cols)
+                    ldf["l_slot_id"] = site_hash_np(ldf["l_host"], site_size)
+                    ldf["bucket"] = url_hash_np(ldf["l_host"], ldf["l_port"],
+                                                ldf["l_path"], hash_size)
+                    yield ldf
 
             links = ex_in.mapInPandas(extract, LINKS_SCHEMA)
 
             # ---- manageUrl gates (file.cxx:329-357) ----
-            domains_csv = "|".join(cfg.domains) if cfg.domains else ""
-            exts_csv = "|".join(cfg.forbidden_extensions)
-            links = links.filter(filter1_udf(
-                "l_host", "l_path", F.lit(domains_csv), F.lit(exts_csv)))
             links = links.filter(
                 F.lit(bool(cfg.external_links)) | F.col("is_redir")
                 | (F.col("l_host") == F.col("parent_host")))
@@ -1302,9 +1329,6 @@ class RoundRunner:
                 "gate_err", F.when(F.col("gate_err").isNotNull(), F.col("gate_err"))
                 .when(F.col("l_depth") < 0, "tooDeep"))
 
-            links = links.withColumn(
-                "l_slot_id",
-                site_hash_udf("l_host", F.lit(cfg.named_site_list_size)))
             slots_now = self._fastfail_slots
             # SCALE: never FORCE-broadcast the slot table onto the link
             # stream — at the widened ~10^8-slot space that is a ~10 GB
@@ -1345,7 +1369,8 @@ class RoundRunner:
                 "E_links", links.select(
                     "fetch_seq", "link_idx", "l_host", "l_port",
                     "l_path", "l_depth",
-                    "l_cookie", "l_tag", "gate_err")), self.width))
+                    "l_cookie", "l_tag", "bucket", "gate_err")),
+                self.width))
             if curation_new is None and self.cfg.curate:
                 curation_new = _act("E:curation_join", _f_curation.result)
                 _cur_ex.shutdown()
@@ -1353,9 +1378,6 @@ class RoundRunner:
 
             # ---- check(): seen testSet in deterministic order (O-6) ----
             survivors = links.filter(F.col("gate_err").isNull())
-            survivors = survivors.withColumn(
-                "bucket", url_bucket_udf("l_host", "l_port", "l_path",
-                                         F.lit(cfg.hash_size)))
             wdedup = Window.partitionBy("bucket").orderBy("fetch_seq", "link_idx")
             survivors = survivors.withColumn("brn", F.row_number().over(wdedup))
             seen_hit = st.seen.withColumn("seen_hit", F.lit(True))

@@ -7,12 +7,19 @@ auto-broadcast disabled so every BroadcastExchange in the plan comes
 from an explicit hint. The left-outer half (a scheduled URL with no
 document row becomes an err40X page) is recovered after that
 checkpoint; the crawl parity tests pin it against the oracle's fetch
-log."""
+log.
+
+The same round's link chain (E_links, E_survivors) must cross into
+Python once: the extract mapInPandas also applies filter1 and emits
+the slot and seen-bucket keys, so none of the per-key UDFs may
+reappear as a separate Arrow evaluation over the link stream."""
 
 import contextlib
 import io
 import os
 import re
+
+import pytest
 
 from larbin_spark.config import CrawlConfig
 from larbin_spark.pipeline.rowsigs import CURATION_SIG_NAMES
@@ -39,33 +46,51 @@ def _broadcast_inputs(plan: str):
     return out
 
 
-def test_fetch_join_never_broadcasts_documents(spark, fixture_dir, seeds):
+@pytest.fixture(scope="module")
+def plan_probe(spark, fixture_dir, seeds):
+    """Plan probe of one production round, curate=True (the full
+    product shape, so the pages checkpoint would carry signature
+    columns if curation leaked into it). Auto-broadcast stays off
+    while the module's tests explain the captured frames."""
     dims = {n: spark.read.parquet(os.path.join(fixture_dir, f"{n}.parquet"))
             for n in ("documents", "hosts", "robots")}
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        # curate=True: the full product shape, so the pages checkpoint
-        # would carry signature columns if curation leaked into it
         runner = RoundRunner(spark, CrawlConfig(curate=True), dims)
         runner.plan_probe = {}
         st = runner.seed(CrawlState.empty(spark), list(seeds))
         runner.run_round(st, 0)
-        pages = runner.plan_probe["E_pages"]
-        plan = _formatted_plan(pages)
-        bc = _broadcast_inputs(plan)
-        # the fetched batch is the one explicit broadcast
-        assert len(bc) >= 1, plan
-        assert any("transfer_seq" in inputs for inputs in bc), bc
-        for inputs in bc:
-            assert "spans" not in inputs, inputs
-            assert "doc_id" not in inputs, inputs
-        assert "CartesianProduct" not in plan
-        # the signatures are computed by the curation finalize pass,
-        # never in the pages checkpoint
-        leaked = [c for c in pages.columns
-                  if c.startswith("_cur_") or c == "_ctext"
-                  or c in CURATION_SIG_NAMES]
-        assert not leaked, leaked
+        yield runner.plan_probe
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_fetch_join_never_broadcasts_documents(plan_probe):
+    pages = plan_probe["E_pages"]
+    plan = _formatted_plan(pages)
+    bc = _broadcast_inputs(plan)
+    # the fetched batch is the one explicit broadcast
+    assert len(bc) >= 1, plan
+    assert any("transfer_seq" in inputs for inputs in bc), bc
+    for inputs in bc:
+        assert "spans" not in inputs, inputs
+        assert "doc_id" not in inputs, inputs
+    assert "CartesianProduct" not in plan
+    # the signatures are computed by the curation finalize pass,
+    # never in the pages checkpoint
+    leaked = [c for c in pages.columns
+              if c.startswith("_cur_") or c == "_ctext"
+              or c in CURATION_SIG_NAMES]
+    assert not leaked, leaked
+
+
+def test_link_chain_crosses_python_once(plan_probe):
+    links_plan = _formatted_plan(plan_probe["E_links"])
+    # tree lines only ('MapInPandas (12)'; details print '(12) ...')
+    assert len(re.findall(r"MapInPandas[^\n(]*\(\d+\)", links_plan)) == 1, \
+        links_plan
+    for stage in ("E_links", "E_survivors"):
+        plan = _formatted_plan(plan_probe[stage])
+        for udf in ("filter1_udf", "site_hash_udf", "url_bucket_udf"):
+            assert udf not in plan, (stage, udf)

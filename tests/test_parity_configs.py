@@ -1,7 +1,8 @@
 """Spark-vs-oracle parity across the behavior-flag space: the main
 parity suite pins the default configuration; this matrix pins the
 conditional code paths (content dedup, site locking, depth reset,
-priority routing, media links, robots bypass, round budgets)."""
+priority routing, media links, robots bypass, round budgets, the
+filter1 domain and extension lists)."""
 
 import os
 
@@ -31,6 +32,13 @@ CONFIGS = {
     # kernel defaults
     "wide_slot_space": dict(named_site_list_size=1_000_000,
                             ip_site_list_size=2_000_000),
+    # the filter1 lists reach the link gate as configured: an empty
+    # domain list admits no link at all — it is not "no gate" (None) —
+    # and an empty extension list forbids nothing, not the default list
+    # (the fixture's 33 media links are .png, forbidden by default)
+    "empty_domains": dict(domains=[]),
+    "limit_domains": dict(domains=["1.example.com"]),
+    "no_forbidden_exts": dict(forbidden_extensions=[], get_image=True),
 }
 
 
