@@ -70,18 +70,6 @@ class CrawlConfig:
     # so only the append-only tables carry K unions of lineage.
     snapshot_every: int = 1
 
-    # write-behind durable commits (plans/crawl.py _AsyncCommitter):
-    # the snapshot save at each boundary overlaps the next rounds'
-    # compute on a background thread instead of blocking the round
-    # loop — the reference likewise flushes its persistent fifos off
-    # the crawl path (persistent_fifo.cxx write-behind rotation).
-    # Resumability is unchanged (resume lands on the latest COMPLETED
-    # snapshot; run_crawl joins all in-flight saves before
-    # returning); results are bit-identical to the synchronous path
-    # (parity tests run both). Synchronous boundaries still happen at
-    # compactions and every RELOAD_ROUNDS rounds (stats reset).
-    async_commit: bool = True
-
     # inline curation (pipeline/rowsigs): when True, phase F records a
     # per-page signature row (token count, quality, predicted
     # language, simhash, fingerprint) for every successful fetch into

@@ -528,8 +528,8 @@ def curation_sigs_batch(texts: pd.Series) -> pd.DataFrame:
 
     A NULL text yields what the expressions yield under Spark's
     default ANSI mode: NULL ``n_tokens``/``pred_score``/
-    ``fingerprint``, ``pred_lang`` 'de' and ``quality`` 1.0 (``least``
-    skips the NULL terms).
+    ``fingerprint``, ``pred_lang`` 'de' and ``quality`` 0.0 (the
+    expression guards a NULL text in either ANSI mode).
 
     Why this exists: in the JVM the 30 ``replace`` scans and the regex
     per page cost ~1.1 s per ~600-page round, all in the one task of
@@ -546,7 +546,7 @@ def curation_sigs_batch(texts: pd.Series) -> pd.DataFrame:
     en = langs.index("en")
     n = len(texts)
     n_tok = [None] * n
-    quality = [1.0] * n
+    quality = [0.0] * n
     pred_lang = [langs[0]] * n
     pred_score = [None] * n
     fprint = [None] * n

@@ -5,15 +5,26 @@ filter" as the replacement for Larbin's in-memory hashTable bitmap
 (src/fetch/hash_table.cxx:36-125). The AUTHORITATIVE seen set in this
 engine stays the exact, range-sharded `seen` bucket table (SCALE.md
 §3) — a probabilistic structure can never carry test-and-set
-semantics alone — but a Bloom filter earns its place as a MAP-SIDE
-PRE-FILTER in front of the exact anti-join:
+semantics alone. This module is the filter's build and probe
+surface: `bloom_build` is the scheduler's restart cost (rebuilding
+the bitmap from the durable seen table), `bloom_probe` the
+map-side test, and `bloom_positions` / `bloom_position_col` the
+cross-engine parity surface (contract query `crawl_bloom_prefilter`).
 
-  * no false negatives: `maybe_seen = false` PROVES the key is new,
-    so those rows cannot match in the exact join — the prefilter's
-    join condition carries `maybe_seen`, and such a row leaves the
-    join with `is_new = true` whatever the seen table holds;
-  * false positives only let extra novel rows reach the exact match
-    test, which then misses — correctness never depends on the filter.
+It is NOT in the frontier pass. A membership filter earns its cost
+only where a negative answer saves a probe of the exact structure.
+In `bloom_prefilter`'s one-join composition no probe is saved: every
+candidate is a preserved row of a left outer join, so it reaches the
+exact seen lookup whatever the filter says — map-side under a
+broadcast, through the shuffle past it. The filter then only adds
+the build's driver collect and a Python crossing per candidate
+(measured slower under both join strategies, docs/SCALE.md §3).
+Pruning would take a second branch that evaluates the candidate plan
+twice or materializes it, which costs more than the lookup it skips.
+
+  * no false negatives: `maybe_seen = false` PROVES the key is new;
+  * false positives only say "maybe": downstream code must treat
+    `maybe_seen` as a hint, never as membership.
 
 At 10^10 seen URLs the exact bitmap (hash_size 2^40 -> 128 GB) can't
 be broadcast, while a Bloom filter trades size for false-positive
@@ -23,8 +34,7 @@ the FP rate to fit smaller boxes). k hash probes derive from ONE md5
 via double hashing — pos_i = (h1 + i*h2) mod m. Build and probe
 project the key to (h1 mod m, h2 mod m) once — one digest per key —
 and expand the k positions in numpy; the construction is
-engine-portable: the DuckDB oracle reproduces every bit position
-(contract query `crawl_bloom_prefilter`).
+engine-portable: the DuckDB oracle reproduces every bit position.
 
 Why Bloom and not cuckoo: a cuckoo filter's win over Bloom is
 deletion support and ~30% space at low FP targets, paid for with
@@ -174,25 +184,20 @@ def bloom_probe(df: DataFrame, bitmap: np.ndarray, col: str,
 
 def bloom_prefilter(candidates: DataFrame, seen: DataFrame, col: str,
                     seen_col: str, m_bits: int, k: int) -> DataFrame:
-    """The pre-filter composition: one probed frame left-joined to the
-    exact seen table on `key == seen_key AND maybe_seen`, with
-    `is_new = seen_key IS NULL`. A `maybe_seen = false` row fails the
-    join condition, so it is new without a seen-key match; a false
-    positive finds no seen key and stays new. Returns `candidates`
-    columns + `is_new`.
+    """`candidates` + `is_new`, exact NOT-IN-seen: one left join of the
+    candidates to the distinct seen keys, `is_new = seen_key IS NULL`
+    (a null candidate key matches nothing, so it is new). The
+    candidate plan runs once and crosses no Python.
 
-    The candidate plan (canonicalization, probe) runs once. The cost
-    of that at scale: every candidate row, not just the maybe-seen
-    ones, travels to the join. While the deduped seen keys fit a
-    broadcast that is a map-side lookup; past it, the provably-new
-    rows also ride the join's shuffle — which a two-branch split
-    would spare only by evaluating the candidate plan twice or
-    materializing it."""
-    bm = bloom_build(seen, seen_col, m_bits, k)
-    probed = bloom_probe(candidates, bm, col, m_bits, k)
+    No Bloom probe sits in front of the join, so `m_bits` and `k` are
+    unread; the name and signature stay for the frontier scheduler's
+    callers. Every candidate is a preserved row of the outer join and
+    reaches the exact lookup whether or not a filter cleared it, so a
+    probe here prunes nothing at any size (module docstring). The
+    crawl round's URL-seen probe is the same exact left join
+    (plans/round.py phase E)."""
     hits = seen.select(F.col(seen_col).alias("_seen_key")).distinct()
     # a matched _seen_key equals a non-null key, so null means no hit
-    return (probed.join(hits, (F.col(col) == F.col("_seen_key"))
-                        & F.col("maybe_seen"), "left")
+    return (candidates.join(hits, F.col(col) == F.col("_seen_key"), "left")
             .withColumn("is_new", F.col("_seen_key").isNull())
-            .drop("_seen_key", "maybe_seen"))
+            .drop("_seen_key"))

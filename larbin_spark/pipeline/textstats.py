@@ -68,14 +68,17 @@ def quality_expr(text=None):
     """The composite quality score as a single column expression
     (rounded to 4 places, engine-exact) — usable inside any
     projection so consumers (budget_pack) fold it into their one
-    corpus scan instead of joining a second quality pass."""
+    corpus scan instead of joining a second quality pass. A NULL text
+    scores 0.0 whatever the ANSI mode: under ANSI `size(NULL)` is
+    NULL, which skips the short-text branch, and `least` skips both
+    NULL terms, which would score it 1.0."""
     text = F.col("text") if text is None else text
     n_tokens = F.size(F.split(text, " "))
     stop_hits = sum((_count_token(text, t)
                      for t in LANG_STOPWORDS["en"][1:]),
                     _count_token(text, LANG_STOPWORDS["en"][0]))
     stop_ratio = stop_hits / n_tokens
-    score = (F.when(n_tokens < 5, 0.0)
+    score = (F.when(text.isNull() | (n_tokens < 5), 0.0)
              .otherwise(F.least(F.lit(1.0), n_tokens / F.lit(200.0)) * 0.5
                         + F.least(F.lit(1.0), stop_ratio * 5) * 0.5))
     return F.round(score, 4)

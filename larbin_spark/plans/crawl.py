@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from ..sources.catalog import SnapshotStore
-from .round import RoundRunner
+from .round import RoundRunner, _act
 from .state import COMPACT_EVERY, CrawlState
 
 # max rounds between parquet rebases of the in-memory state: the
@@ -74,20 +74,20 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
     Durable snapshots commit every cfg.snapshot_every round
     boundaries (default 1 = every round) plus a trailing commit at
     exit, so the returned state is always resumable. Resume picks up
-    the latest COMPLETED snapshot exactly. With cfg.async_commit
-    (default) the save is write-behind: it overlaps the next rounds'
-    compute on an ordered background thread (_AsyncCommitter) and is
-    joined at the next boundary — off the round's critical path, like
-    the reference's persistent-fifo flush. Synchronous boundaries
-    (save + reload, which rebases the state plans on parquet and
-    resets Catalyst size statistics, plans/round.py phase F) still
-    happen at every compaction and at least every RELOAD_ROUNDS
-    rounds. Between them the bounded hot tables (ip_queue, buckets)
-    live on the localCheckpoints run_round takes, overlapped with its
-    phase E, and the unbounded ones (queues, seen, dup_seen) stay
-    lazy compositions over the last reload's parquet plus the
-    rounds' already-checkpointed deltas: materializing those would
-    be O(state) per round, defeating the O(delta) commit design.
+    the latest COMPLETED snapshot exactly. The save is write-behind:
+    it overlaps the next rounds' compute on an ordered background
+    thread (_AsyncCommitter) and is joined at the next boundary — off
+    the round's critical path, like the reference's persistent-fifo
+    flush. Synchronous boundaries (save + reload, which rebases the
+    state plans on parquet and resets Catalyst size statistics,
+    plans/round.py phase F) still happen at every compaction and at
+    least every RELOAD_ROUNDS rounds. Between them the bounded hot
+    tables (ip_queue, buckets) live on the localCheckpoints run_round
+    takes, overlapped with its phase E, and the unbounded ones
+    (queues, seen, dup_seen) stay lazy compositions over the last
+    reload's parquet plus the rounds' already-checkpointed deltas:
+    materializing those would be O(state) per round, defeating the
+    O(delta) commit design.
     """
     import tempfile
     import time
@@ -109,17 +109,12 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
     if store is None:
         store = SnapshotStore(tempfile.mkdtemp(prefix="larbin_snap_"))
 
-    committer = _AsyncCommitter() if cfg.async_commit else None
+    committer = _AsyncCommitter()
     rnd = 0
     if resume and store.latest() is not None:
         last = store.latest()
         st = CrawlState.load(spark, store, last)
         rnd = st.counters["round"]
-    elif committer is None:
-        st = CrawlState.empty(spark)
-        st = runner.seed(st, seeds)
-        st.save(store, 0)  # bootstrap snapshot (before round 0)
-        st = CrawlState.load(spark, store, 0)
     else:
         # write-behind bootstrap (r5): the bootstrap snapshot's 13
         # table writes are the session's FIRST jobs — run
@@ -131,8 +126,7 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
         # keeps its in-memory seed plans for round 0 (the parquet
         # rebase + statistics reset happens at the next synchronous
         # boundary as usual); resumability is unchanged — a crash
-        # before the save lands just resumes from nothing, exactly
-        # like a crash during the old synchronous bootstrap.
+        # before the save lands just resumes from nothing.
         st = CrawlState.empty(spark)
         st = runner.seed(st, seeds)
         _submit_commit(committer, st, store, 0, keep_snapshots)
@@ -161,49 +155,41 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
             st = runner.run_round(st, rnd)
             rnd += 1
             if rnd % max(1, cfg.snapshot_every) == 0:
-                if committer is None:
+                # join the in-flight save (it had a full commit window
+                # of rounds to finish, so this is ~free): the
+                # chain-length inspection below reads a quiescent
+                # store and the next save composes its deltas against
+                # a completed predecessor
+                _act("F:committer_join", committer.join)
+                if (rnd - last_reload >= RELOAD_ROUNDS
+                        or _compaction_due(store)):
+                    # synchronous boundary: a compaction rewrites full
+                    # tables from plans based on the LAST reload's
+                    # files, and the rebase right after keeps every
+                    # in-memory plan on files prune cannot expire; the
+                    # periodic rebase also resets Catalyst size
+                    # statistics (phase F)
                     st = _commit(spark, st, store, rnd, keep_snapshots)
                     last_reload = rnd
                 else:
-                    # join the in-flight save (it had a full commit
-                    # window of rounds to finish, so this is ~free):
-                    # the chain-length inspection below reads a
-                    # quiescent store and the next save composes its
-                    # deltas against a completed predecessor
-                    from .round import _act
-                    _act("F:committer_join", committer.join)
-                    if (rnd - last_reload >= RELOAD_ROUNDS
-                            or _compaction_due(store)):
-                        # synchronous boundary: a compaction rewrites
-                        # full tables from plans based on the LAST
-                        # reload's files, and the rebase right after
-                        # keeps every in-memory plan on files prune
-                        # cannot expire; the periodic rebase also
-                        # resets Catalyst size statistics (phase F)
-                        st = _commit(spark, st, store, rnd,
-                                     keep_snapshots)
-                        last_reload = rnd
-                    else:
-                        _submit_commit(committer, st, store, rnd,
-                                       keep_snapshots)
+                    _submit_commit(committer, st, store, rnd,
+                                   keep_snapshots)
                 committed = rnd
     except BaseException:
-        if committer is not None:
-            try:
-                committer.close()  # the in-flight snapshot stays
-            except Exception:      # resumable; don't mask the
-                pass               # round's own error with a save's
+        try:
+            committer.close()  # the in-flight snapshot stays
+        except Exception:      # resumable; don't mask the
+            pass               # round's own error with a save's
         raise
-    if committer is not None:
-        committer.close()
+    committer.close()
     # trailing rounds since the last boundary become durable at exit,
     # so the returned state is always resumable-from-here
     if committed != rnd:
         st = _commit(spark, st, store, rnd, keep_snapshots)
     elif last_reload != rnd:
-        # async path: rebase the returned state onto the durable
-        # snapshot — its lazy table plans must not outlive prune's
-        # data-dir expiry once the caller holds it past more commits
+        # rebase the returned state onto the durable snapshot: its
+        # lazy table plans must not outlive prune's data-dir expiry
+        # once the caller holds it past more commits
         st = CrawlState.load(spark, store, rnd)
     return st
 
@@ -249,7 +235,6 @@ def _commit(spark: SparkSession, st: CrawlState, store: SnapshotStore,
     """Durable snapshot boundary: write the accumulated deltas, then
     reload so Catalyst's size statistics reset to real file sizes
     (plans/round.py phase F)."""
-    from .round import _act
     _act("F:commit_sync_save", lambda: st.save(store, rnd))
     st = _act("F:commit_reload",
               lambda: CrawlState.load(spark, store, rnd))

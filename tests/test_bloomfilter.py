@@ -3,9 +3,11 @@
 Pins the two properties the pre-filter's correctness argument rests
 on (no false negatives; false positives exist so downstream code
 cannot treat maybe_seen as exact), the prefilter composition's
-equivalence to a plain exact anti-join (also with null keys and an
-empty seen table), the numpy build's agreement with the JVM positions
-relation, and the one-pass shape of the prefilter's plan.
+equivalence to a plain exact anti-join (also with null keys, an empty
+seen table and duplicated seen keys, under a broadcast and under a
+sort-merge join), the numpy build's agreement with the JVM positions
+relation, and the one-pass, Python-free shape of the prefilter's
+plan.
 """
 
 import numpy as np
@@ -14,6 +16,20 @@ from pyspark.sql import functions as F
 from larbin_spark.operators import bloomfilter as bf
 
 M_BITS, K = 2048, 3
+
+
+def _under_both_join_strategies(spark, check):
+    """check(join) under the session's config, where the seen lookup
+    is a BroadcastHashJoin at these sizes, then with broadcasts off,
+    where it is a SortMergeJoin (the at-scale strategy)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        check("BroadcastHashJoin")
+        spark.conf.set(key, "-1")
+        check("SortMergeJoin")
+    finally:
+        spark.conf.set(key, old)
 
 
 def _urls(spark, n):
@@ -59,14 +75,23 @@ def test_positions_match_bitmap_probe(spark):
 
 def test_prefilter_equals_plain_antijoin(spark):
     """bloom_prefilter's is_new must equal exact NOT-IN-seen for
-    every candidate — FPs take the slow path, never flip the answer."""
+    every candidate, whichever join strategy runs the lookup. With
+    every seen key twice, the distinct on the seen side keeps each
+    candidate one row with the same is_new."""
     d = _urls(spark, 500)
     seen = d.filter("is_seen").select(F.col("url").alias("u"))
-    out = bf.bloom_prefilter(d, seen, "url", "u", M_BITS, K)
-    got = {r["url"]: r["is_new"] for r in out.collect()}
-    assert len(got) == 500
-    for r in d.collect():
-        assert got[r["url"]] == (not r["is_seen"])
+    want = {r["url"]: not r["is_seen"] for r in d.collect()}
+
+    def check(join):
+        for s in (seen, seen.unionAll(seen)):
+            out = bf.bloom_prefilter(d, s, "url", "u", M_BITS, K)
+            rows = out.collect()
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert join in plan
+            assert len(rows) == 500
+            assert {r["url"]: r["is_new"] for r in rows} == want
+
+    _under_both_join_strategies(spark, check)
 
 
 def test_probe_handles_empty_batch(spark):
@@ -92,29 +117,40 @@ def test_build_bits_equal_positions_relation(spark):
 
 def test_prefilter_null_candidate_keys(spark):
     """A null candidate key matches no seen key, so it is new; null
-    seen keys set no bits and match nothing."""
+    seen keys match nothing."""
     d = _urls(spark, 200).withColumn(
         "url", F.when(F.col("url").endswith("7"), None)
         .otherwise(F.col("url")))
     seen = d.filter("is_seen").select(F.col("url").alias("u"))
-    rows = bf.bloom_prefilter(d, seen, "url", "u", M_BITS, K).collect()
-    assert len(rows) == 200
-    assert sum(r["url"] is None for r in rows) == 20
-    for r in rows:
-        assert r["is_new"] == (r["url"] is None or not r["is_seen"])
+
+    def check(_join):
+        rows = bf.bloom_prefilter(d, seen, "url", "u", M_BITS,
+                                  K).collect()
+        assert len(rows) == 200
+        assert sum(r["url"] is None for r in rows) == 20
+        for r in rows:
+            assert r["is_new"] == (r["url"] is None or not r["is_seen"])
+
+    _under_both_join_strategies(spark, check)
 
 
 def test_prefilter_empty_seen(spark):
     d = _urls(spark, 100)
     seen = spark.createDataFrame([], "u string")
-    rows = bf.bloom_prefilter(d, seen, "url", "u", M_BITS, K).collect()
-    assert len(rows) == 100 and all(r["is_new"] for r in rows)
+
+    def check(_join):
+        rows = bf.bloom_prefilter(d, seen, "url", "u", M_BITS,
+                                  K).collect()
+        assert len(rows) == 100 and all(r["is_new"] for r in rows)
+
+    _under_both_join_strategies(spark, check)
 
 
 def test_prefilter_plan_crosses_python_once(spark):
-    """Over canon_keys_stage the prefilter is one probed frame and one
-    join: no Union re-evaluating the candidates per branch, so the
-    canonicalizer and the probe each appear once in the plan."""
+    """Over canon_keys_stage the prefilter is one join: no Union
+    re-evaluating the candidates per branch, so the canonicalizer
+    appears once in the plan, and no Bloom probe crosses into Python
+    for membership."""
     from larbin_spark.functions.udfs import canon_keys_stage
     src = _urls(spark, 100).select(
         "url", F.monotonically_increasing_id().alias("qseq"))
@@ -125,4 +161,4 @@ def test_prefilter_plan_crosses_python_once(spark):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" not in plan
     assert plan.count("MapInPandas") == 1
-    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("ArrowEvalPython") == 0

@@ -106,38 +106,38 @@ def test_snapshot_every_same_results(spark, dims, seeds, tmp_path):
     assert collect_results(st_res)["ordering"] == full["ordering"]
 
 
-def test_async_commit_matches_sync_across_compaction_and_prune(
-        spark, dims, seeds, tmp_path, monkeypatch):
-    """The write-behind commit (cfg.async_commit, the default) changes
-    only WHEN the snapshot write happens, never what the crawl
-    computes or what resume sees. Stress the bookkeeping the overlap
-    relies on: tiny COMPACT_EVERY forces multiple mid-crawl
+def test_write_behind_commit_matches_oracle_across_compaction_and_prune(
+        spark, dims, seeds, fixture_web, tmp_path, monkeypatch):
+    """The write-behind commit changes only WHEN the snapshot write
+    happens, never what the crawl computes or what resume sees: the
+    crawl matches the oracle exactly. Stress the bookkeeping the
+    overlap relies on: tiny COMPACT_EVERY forces multiple mid-crawl
     compactions (synchronous boundaries reading plans based on the
     last reload's files), tiny RELOAD_ROUNDS exercises the periodic
     parquet rebase, keep_snapshots=2 lets prune expire data dirs while
     the in-memory lazy plans are still alive, and collect_results at
     the end reads every table through the exit rebase."""
+    from larbin_spark.fixtures.webgen import to_oracle_inputs
+    from larbin_spark.oracle.simulator import CrawlOracle
     from larbin_spark.plans import crawl as crawlmod
     from larbin_spark.plans import state as statemod
     monkeypatch.setattr(crawlmod, "RELOAD_ROUNDS", 5)
     monkeypatch.setattr(crawlmod, "COMPACT_EVERY", 4)
     monkeypatch.setattr(statemod, "COMPACT_EVERY", 4)
 
-    base = collect_results(run_crawl(
-        spark, CrawlConfig(async_commit=False), dims, list(seeds),
-        max_rounds=9, store=SnapshotStore(str(tmp_path / "sync")),
-        keep_snapshots=2))
-    store = SnapshotStore(str(tmp_path / "async"))
-    st = run_crawl(spark, CrawlConfig(async_commit=True), dims,
-                   list(seeds), max_rounds=9, store=store,
-                   keep_snapshots=2)
+    docs, hosts, robots, _ = to_oracle_inputs(fixture_web)
+    want = CrawlOracle(CrawlConfig(), docs, hosts, robots).run(
+        list(seeds), max_rounds=9)
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    st = run_crawl(spark, CrawlConfig(), dims, list(seeds), max_rounds=9,
+                   store=store, keep_snapshots=2)
     got = collect_results(st)
 
-    assert got["ordering"] == base["ordering"]
-    assert got["seen"] == base["seen"]
-    assert got["errors"] == base["errors"]
-    assert sorted(got["fetch_log"]) == sorted(base["fetch_log"])
-    assert got["emitted"] == base["emitted"]
+    assert got["ordering"] == want["ordering"]
+    assert sorted(got["seen"]) == sorted(want["seen"])
+    assert got["errors"] == want["errors"]
+    assert sorted(got["fetch_log"]) == sorted(want["fetch_log"])
+    assert got["emitted"] == want["emitted"]
     # every in-flight save was joined before return: the store's
     # latest snapshot is the final round and is loadable (resumable)
     assert store.latest() == 9

@@ -155,3 +155,14 @@ def test_curation_sigs_kernel_matches_expr(spark, docs):
     assert (by_id[6]["pred_lang"], by_id[6]["pred_score"]) == ("en", 2)
     assert by_id[8]["pred_lang"] == "zh"
     assert by_id[9]["quality"] == 0.5488 and round(0.54875, 4) == 0.5487
+    # a NULL text scores the minimum quality with ANSI on and off
+    ansi = "spark.sql.ansi.enabled"
+    old = spark.conf.get(ansi)
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set(ansi, mode)
+            (r,) = null_doc.select(
+                *rowsigs.curation_cols(F.col("text"))).collect()
+            assert r["quality"] == 0.0, mode
+    finally:
+        spark.conf.set(ansi, old)
