@@ -38,6 +38,7 @@ from typing import Iterator, List
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,6 +51,31 @@ from pyspark.sql import types as T
 # object, last call wins) so the audit can explain() the stage that
 # actually ran.
 PLAN_PROBE: dict = {}
+
+
+class _DictSum(AccumulatorParam):
+    """Accumulator of {key: count} dicts, merged by per-key sum."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        for k, n in b.items():
+            a[k] = a.get(k, 0) + n
+        return a
+
+
+def _group_sizes(pdf: pd.DataFrame, by: List[str]) -> dict:
+    """{key: rows} of pdf grouped by the `by` columns, a tuple key when
+    there are several. Keys are plain python values (hashable,
+    picklable and == the collected Row value), and a null key counts
+    under None."""
+    out = {}
+    for k, n in pdf.groupby(by, sort=False, dropna=False).size().items():
+        ks = tuple(None if pd.isna(v) else v.item() if hasattr(v, "item")
+                   else v for v in (k if isinstance(k, tuple) else (k,)))
+        out[ks if len(by) > 1 else ks[0]] = int(n)
+    return out
 
 
 def assign_global_seq(df: DataFrame, order_cols: List[str],
@@ -94,17 +120,6 @@ def assign_global_seq(df: DataFrame, order_cols: List[str],
         list(ranked.schema.fields) + [T.StructField("_lrn", T.LongType())])
 
     by = list(counts_by or [])
-    from pyspark.accumulators import AccumulatorParam
-
-    class _DictSum(AccumulatorParam):
-        def zero(self, value):
-            return {}
-
-        def addInPlace(self, a, b):
-            for k, n in b.items():
-                a[k] = a.get(k, 0) + n
-            return a
-
     acc = spark.sparkContext.accumulator({}, _DictSum())
 
     def local_rank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -117,17 +132,8 @@ def assign_global_seq(df: DataFrame, order_cols: List[str],
             if len(pdf):
                 pid = int(pdf["_pid"].iloc[0])
                 if by:
-                    sizes = pdf.groupby(by[0], sort=False,
-                                        dropna=False).size()
-                    for k, c in sizes.items():
-                        # numpy scalars -> plain python (hashable,
-                        # picklable, and == to the collected-Row value
-                        # the pre-r5 two-job form produced); a null
-                        # key arrives as NaN/None/NaT and counts as None
-                        if pd.isna(k):
-                            k = None
-                        key = (pid, k.item() if hasattr(k, "item") else k)
-                        part[key] = part.get(key, 0) + int(c)
+                    for k, c in _group_sizes(pdf, by).items():
+                        part[(pid, k)] = part.get((pid, k), 0) + c
                 else:
                     part[(pid, None)] = part.get((pid, None), 0) + len(pdf)
             yield pdf

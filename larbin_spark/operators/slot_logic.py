@@ -4,7 +4,7 @@ These pure functions implement NamedSite::putGenericUrl
 (site.cxx:136-207) and the dnsErr/robotsResult fifo scans
 (site.cxx:345-380, 415-480) for ONE slot, and run inside
 applyInPandas stages keyed by slot_id modulo the core count
-(plans/round.py:_apply_per_slot — one pandas group per core;
+(plans/round.py:_slot_pass — one pandas group per core;
 co-location per slot is preserved by the bucket shuffle while the
 per-group Arrow constant is paid per bucket, not per slot; 20k
 open-addressed slots as native groups cost ~100 s/round in pure

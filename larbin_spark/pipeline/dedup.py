@@ -121,8 +121,7 @@ def minhash_signatures(documents: DataFrame, n_hashes: int = 16,
     hash_fn="xxhash64": h_i = xxhash64(i, shingle) as a long — a
     single JVM codegen'd hash per shingle, no md5 at all; same
     statistical properties (any uniform hash family works for
-    MinHash), the scale path when no cross-engine oracle must agree
-    (benchmarked separately in bench.py)."""
+    MinHash), the scale path when no cross-engine oracle must agree."""
     sh = _shingles(documents, k).select("doc_id", "shingle").distinct()
     if hash_fn == "xxhash64":
         aggs = [F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"mh{i}")

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from ..sources.catalog import SnapshotStore
-from .round import RoundRunner, _act
+from .round import RoundRunner
 from .state import COMPACT_EVERY, CrawlState
 
 # max rounds between parquet rebases of the in-memory state: the
@@ -160,7 +160,7 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
                 # chain-length inspection below reads a quiescent
                 # store and the next save composes its deltas against
                 # a completed predecessor
-                _act("F:committer_join", committer.join)
+                committer.join()
                 if (rnd - last_reload >= RELOAD_ROUNDS
                         or _compaction_due(store)):
                     # synchronous boundary: a compaction rewrites full
@@ -235,9 +235,8 @@ def _commit(spark: SparkSession, st: CrawlState, store: SnapshotStore,
     """Durable snapshot boundary: write the accumulated deltas, then
     reload so Catalyst's size statistics reset to real file sizes
     (plans/round.py phase F)."""
-    _act("F:commit_sync_save", lambda: st.save(store, rnd))
-    st = _act("F:commit_reload",
-              lambda: CrawlState.load(spark, store, rnd))
+    st.save(store, rnd)
+    st = CrawlState.load(spark, store, rnd)
     store.prune(keep_last=keep_snapshots)
     return st
 

@@ -217,14 +217,6 @@ class CrawlState:
         prev_rnd = store.latest()
 
         def _write(name: str) -> None:
-            # per-table save timing (SPARK_GRAFT_PROFILE): with the
-            # write-behind committer these run off the critical path,
-            # but their per-volume growth is exactly what the span
-            # attribution needs (VERDICT r4 #2)
-            from .round import _act
-            _act(f"F:save:{name}", lambda: _write_one(name))
-
-        def _write_one(name: str) -> None:
             range_col = self._RANGE_SHARDED.get(name)
             if (name in APPEND_ONLY and name in self.deltas
                     and prev_rnd is not None and prev_rnd < rnd):

@@ -86,12 +86,6 @@ def main() -> None:
     builder = builder.config(
         "spark.driver.memory",
         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    if os.environ.get("SPARK_GRAFT_PROFILE"):
-        # the per-phase job counter reads statusTracker's known-job
-        # list, which is capped by spark.ui.retainedJobs (default
-        # 1000 ~ 16 rounds) — raise it so long profiled runs don't
-        # silently under-count
-        builder = builder.config("spark.ui.retainedJobs", "1000000")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -156,20 +150,8 @@ def main() -> None:
                 st.tables["docs_out"],
                 ["round", "fetch_seq", "doc_id", "spans", "tag"]),
         }
-    action_prof = {}
-    if os.environ.get("SPARK_GRAFT_PROFILE"):
-        # per-eager-action span attribution (plans/round.py ACTION_PROF):
-        # label -> {total seconds, call count, per-call series}. The
-        # per-call series across rounds is what shows an action's time
-        # growing with frontier/page mass (VERDICT r4 #2).
-        from larbin_spark.plans.round import ACTION_PROF
-        action_prof = {
-            "action_prof": {
-                k: {"total": round(sum(v), 2), "n": len(v), "per": v}
-                for k, v in sorted(ACTION_PROF.items())}}
     print(json.dumps({
         **digests,
-        **action_prof,
         "wall_sec": wall,
         "rounds": st.counters["round"],
         "pages_ok": st.counters["pages_ok"],

@@ -111,9 +111,21 @@ def test_inflight_counter_matches_slot_table(spark_result):
     """The sequencer's RAM-budget input (`ram_used`) is derived from
     the incrementally-maintained n_site_fifo + n_ip_queue counters
     instead of a per-round sum(nburls) aggregation job — this pins the
-    invariant the substitution relies on."""
+    invariant the substitution relies on, and every other counter the
+    slot-pass counts feed against the table it mirrors."""
     _res, st = spark_result
+    c = st.counters
     nburls = st.slots.agg(
         F.coalesce(F.sum("nburls"), F.lit(0))).collect()[0][0]
-    assert int(nburls) == (st.counters["n_site_fifo"]
-                           + st.counters["n_ip_queue"])
+    assert int(nburls) == c["n_site_fifo"] + c["n_ip_queue"]
+    by_queue = {r["queue"]: r["count"]
+                for r in st.queues.groupBy("queue").count().collect()}
+    for q in ("priority", "priority_wait", "disk", "disk_wait"):
+        assert c[f"n_{q}"] == by_queue.get(q, 0), q
+    assert c["n_site_fifo"] == st.site_fifo.count()
+    assert c["n_ip_queue"] == st.ip_queue.count()
+    # not vacuous: the crawl stops with URLs still queued and waiting
+    # for their ip bucket
+    assert sum(by_queue.values()) > 0 and c["n_ip_queue"] > 0
+    max_seq = st.ip_queue.agg(F.max("transfer_seq")).collect()[0][0]
+    assert c["transfer_seq_next"] > max_seq

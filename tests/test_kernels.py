@@ -295,7 +295,7 @@ def test_render_content_deterministic():
 def test_slot_spans_partition(ids):
     """_slot_spans yields exactly the contiguous equal-run partition
     of a sorted id array (the zero-copy replacement for per-slot
-    pandas groups in plans/round.py:_apply_per_slot)."""
+    pandas groups in plans/round.py:_slot_pass)."""
     from larbin_spark.plans.round import _slot_spans
     ids = sorted(ids)
     spans = _slot_spans(ids)
