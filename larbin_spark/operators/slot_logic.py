@@ -1,9 +1,10 @@
 """Per-slot sequential routing logic for the Spark pipeline.
 
 These pure functions implement NamedSite::putGenericUrl
-(site.cxx:136-207) and the dnsErr/robotsResult fifo scans
-(site.cxx:345-380, 415-480) for ONE slot, and run inside
-applyInPandas stages keyed by slot_id modulo the core count
+(site.cxx:136-207), the newId DNS/robots resolve (site.cxx:395-436)
+and the dnsErr/robotsResult fifo scans (site.cxx:345-380, 415-480)
+for ONE slot, and run inside the round's one per-slot applyInPandas
+pass, keyed by slot_id modulo the core count
 (plans/round.py:_slot_pass — one pandas group per core;
 co-location per slot is preserved by the bucket shuffle while the
 per-group Arrow constant is paid per bucket, not per slot; 20k
@@ -37,6 +38,11 @@ E_FORBIDDEN = "forbiddenRobots"
 WAIT_DNS, DONE_DNS, ERROR_DNS, NOCONN_DNS = "wait", "done", "error", "noconn"
 
 CLASS_LIMIT = {"priority_wait": 1, "priority": 5, "disk_wait": 10, "disk": 15}
+
+# the state of a slot no URL has reached yet (SLOTS_SCHEMA columns)
+NEW_SLOT = {"name": "", "port": 0, "dns_state": WAIT_DNS, "forbidden": None,
+            "nburls": 0, "dns_queue_pos": None, "dns_expire_round": -1,
+            "ip_hash": 0}
 
 
 def _allowed(path: str, forbidden, ignore_robots: bool) -> bool:
@@ -98,6 +104,35 @@ def route_take(slot: Dict, rows: List[Dict], cfg: Dict, rnd: int) -> List[Tuple[
             nburls -= 1
             out.append((A_FORGET, E_NO_CONN))
     return out
+
+
+def resolve_head(head: Dict, old_forbidden, user_agent: str,
+                 ip_slot_size: int) -> Tuple[str, object, int]:
+    """Phase-C DNS + robots for one slot whose fifo head is `head`
+    (newId, site.cxx:395-436): the head row carries its host's dims —
+    dns_ok, ip, rob_status, rob_body, rob_reachable, None when absent.
+
+    returns (outcome, forbidden list, ip hash). A robots 2xx is parsed
+    on doneDns and clears the list on a failed resolve; with no 2xx the
+    old list survives, as the reference only recycles it inside
+    parseRobots (file.cxx:172-180)."""
+    from ..kernels.hashes import ip_hash
+    from ..kernels.robots import parse_robots
+    if not head["dns_ok"]:
+        outcome = ERROR_DNS
+    elif head["rob_reachable"] is not None and not head["rob_reachable"]:
+        outcome = NOCONN_DNS
+    else:
+        outcome = DONE_DNS
+    status = head["rob_status"]
+    if status is not None and 200 <= int(status) < 300:
+        forbidden = (parse_robots(head["rob_body"] or "", user_agent)
+                     if outcome == DONE_DNS else None)
+    else:
+        forbidden = old_forbidden
+    ip = (ip_hash(head["ip"], ip_slot_size)
+          if outcome == DONE_DNS and head["ip"] is not None else 0)
+    return outcome, forbidden, ip
 
 
 def resolve_fifo(head_puny: str, head_port: int, outcome: str,

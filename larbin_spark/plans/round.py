@@ -2,11 +2,13 @@
 
 Phase map (the oracle simulator is the executable spec):
   A valve        -> driver counter arithmetic (main.cxx:190-199)
-  B sequencer    -> ordered global take (TopK) + applyInPandas slot
-                    routing over slot_id groups (sequencer.cxx,
-                    site.cxx:136-207)
-  C dns+robots   -> broadcast joins against hosts/robots dims +
-                    applyInPandas fifo scans (site.cxx:212-496)
+  B sequencer    -> ordered global take (TopK), then ONE per-slot
+  C dns+robots      applyInPandas pass over take + site fifo with the
+                    slot state and hosts/robots dims broadcast-joined
+                    on: routing (sequencer.cxx, site.cxx:136-207),
+                    then each queued slot's head resolve, robots
+                    parse and fifo scan (site.cxx:212-496); the
+                    dns_per_round cap is applied after its checkpoint
   D politeness   -> window row_number per ip_hash bucket
                     (site.cxx:572-644)
   E fetch+parse  -> broadcast join against documents + mapInPandas
@@ -40,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import CrawlConfig
-from ..functions.udfs import robots_allowed_udf, site_hash_udf
+from ..functions.exprs import robots_regex, site_hash_col
 from ..kernels.links import clean_redirect_text, extract_links
 from ..kernels.urlfilter import filter1
 from ..kernels.urlnorm import ParsedUrl, give_base, parse_url, punycode_host
@@ -51,33 +53,27 @@ from .state import (
     SLOTS_SCHEMA,
 )
 
-ROUTED_SCHEMA = T.StructType(
-    [f for f in QUEUE_SCHEMA if f.name != "queue"] + [
-        T.StructField("slot_id", T.IntegerType()),
+# The per-slot pass (phases B and C, see run_round) emits one tagged
+# frame. `kind` says what a row is:
+#   take  one per taken URL: its phase-B action (cls, take_rank)
+#   fifo  one per post-B site-fifo row: its phase-C action, computed
+#         as if the slot were selected (fifo_pos, dns_queue_pos)
+#   slot  one per touched slot: its post-B state (s_*, dns_queue_pos)
+#   head  one per queued slot: its post-C state, as if selected, and
+#         whether it re-queues for DNS
+# ip_hash is the bucket a transfer goes to; s_* mirror SLOTS_SCHEMA.
+_SLOT_STATE = [f for f in SLOTS_SCHEMA
+               if f.name not in ("slot_id", "dns_queue_pos")]
+SLOT_PASS_SCHEMA = T.StructType(
+    [T.StructField("kind", T.StringType())] + list(SITE_FIFO_SCHEMA) + [
         T.StructField("take_rank", T.LongType()),
         T.StructField("cls", T.StringType()),
-        T.StructField("s_ip_hash", T.IntegerType()),
         T.StructField("action", T.StringType()),
         T.StructField("err", T.StringType()),
-    ])
-
-RESOLVED_SCHEMA = T.StructType(
-    list(SITE_FIFO_SCHEMA) + [
+        T.StructField("ip_hash", T.IntegerType()),
         T.StructField("dns_queue_pos", T.LongType()),
-        T.StructField("new_ip_hash", T.IntegerType()),
-        T.StructField("action", T.StringType()),
-        T.StructField("err", T.StringType()),
-        # slot-constant head metadata, emitted on every row so the
-        # slot update (upd) is ONE aggregation over `resolved` instead
-        # of a separate checkpointed `heads` dataframe (the fused
-        # phase C: head resolve + robots parse + fifo scan in a single
-        # Arrow pass — see _phase_c)
-        T.StructField("proc_rank", T.LongType()),
-        T.StructField("head_puny", T.StringType()),
-        T.StructField("head_port", T.IntegerType()),
-        T.StructField("outcome", T.StringType()),
-        T.StructField("eff_forbidden", T.ArrayType(T.StringType())),
-    ])
+        T.StructField("requeue", T.BooleanType()),
+    ] + [T.StructField("s_" + f.name, f.dataType) for f in _SLOT_STATE])
 
 # SCALE note (r5): no l_url column — the canonical URL string is a
 # pure function of (l_host, l_port, l_path) (ParsedUrl.url,
@@ -197,16 +193,6 @@ def _lc(df: DataFrame, parts: int = _STATE_PARTITIONS) -> DataFrame:
     tasks. State tables stay at a fixed partition count; at cluster
     scale this constant is sized to the executor count."""
     return df.coalesce(parts).localCheckpoint(eager=True)
-
-
-def _defaults_for_new_slots(df: DataFrame) -> DataFrame:
-    return df.select(
-        "slot_id", F.lit("").alias("name"), F.lit(0).alias("port"),
-        F.lit(slot_logic.WAIT_DNS).alias("dns_state"),
-        F.lit(None).cast(T.ArrayType(T.StringType())).alias("forbidden"),
-        F.lit(0).alias("nburls"),
-        F.lit(None).cast(T.LongType()).alias("dns_queue_pos"),
-        F.lit(-1).alias("dns_expire_round"), F.lit(0).alias("ip_hash"))
 
 
 class RoundRunner:
@@ -364,8 +350,6 @@ class RoundRunner:
     def run_round(self, st: CrawlState, rnd: int) -> CrawlState:
         cfg = self.cfg
         C = st.counters
-        cfg_b = {"max_urls_by_site": cfg.max_urls_by_site,
-                 "ignore_robots": cfg.ignore_robots}
 
         # ---------- phase A: wait valve ----------
         # The valve ("read the first n wait rows as of valve open",
@@ -414,113 +398,49 @@ class RoundRunner:
             "take_rank",
             F.row_number().over(Window.orderBy("cls_order", "qseq")) - 1
             + F.lit(C["take_next"]))
-        take = (take.withColumnRenamed("queue", "cls")
-                .withColumn("slot_id", site_hash_udf(
-                    "host", F.lit(cfg.named_site_list_size)))
-                .withColumn("puny", _puny_col(cfg, F.col("host"))))
+        take = (take.withColumnRenamed("queue", "cls").drop("cls_order")
+                .withColumn("slot_id", site_hash_col(
+                    "host", cfg.named_site_list_size)))
         # capture the pre-checkpoint take for the plan audit (the
         # frontier-scan shape — TakeOrdered + the single take_rank
         # window — lives here), then materialize: the take feeds BOTH
-        # the slot-reduction semi-join and the routing join below, and
+        # the slot-reduction semi-join and the pass input below, and
         # without the checkpoint the TakeOrdered would scan the
         # frontier twice per round
         take = _lc(self._cap("B_take", take))
+        bc, counts = self._slot_steps(st, take, rnd)
+        queues = st.queues.join(take.select("qseq"), "qseq", "left_anti")
 
-        slots_pref = st.slots.select(
-            "slot_id", F.col("name").alias("s_name"),
-            F.col("port").alias("s_port"),
-            F.col("dns_state").alias("s_dns_state"),
-            F.col("forbidden").alias("s_forbidden"),
-            F.col("nburls").alias("s_nburls"),
-            F.col("dns_expire_round").alias("s_dns_expire_round"),
-            F.col("ip_hash").alias("s_ip_hash"))
-        # SCALE: the slot space is config-widened to ~10^8 rows
-        # (~10 GB) at the north-rule frontier (SCALE.md §1), so the
-        # FULL slot table must never be broadcast. The take is bounded
-        # by the sequencer budget: semi-join slots down to the take's
-        # distinct slot_ids first (broadcasting the take side, which
-        # IS small), then broadcast only the reduced slot rows.
-        take_ids = take.select("slot_id").distinct()
-        slots_pref = slots_pref.join(F.broadcast(take_ids), "slot_id",
-                                     "left_semi")
-        take = take.join(F.broadcast(slots_pref), "slot_id", "left")
-
-        def phase_b(pdf: pd.DataFrame) -> pd.DataFrame:
-            # one vectorized pass per BUCKET of slots (see
-            # _slot_pass): sort once, extract row dicts once,
-            # then walk per-slot spans with pure-Python slot state —
-            # no per-slot pandas objects anywhere
-            pdf = (pdf.sort_values(["slot_id", "take_rank"])
-                   .reset_index(drop=True))
-            rows = pdf[["host", "port", "path", "puny", "cls"]] \
-                .to_dict("records")
-            sname = pdf["s_name"].tolist()
-            sport = pdf["s_port"].tolist()
-            sdns = pdf["s_dns_state"].tolist()
-            sforb = pdf["s_forbidden"].tolist()
-            snb = pdf["s_nburls"].tolist()
-            sexp = pdf["s_dns_expire_round"].tolist()
-
-            def _scalar(v, default):
-                return default if v is None or v != v else v
-
-            n = len(rows)
-            actions = [None] * n
-            errs = [None] * n
-            for i, j in _slot_spans(pdf["slot_id"].to_numpy()):
-                slot = {
-                    "name": _scalar(sname[i], ""),
-                    "port": _scalar(sport[i], 0),
-                    "dns_state": _scalar(sdns[i], None),
-                    "forbidden": (None if sforb[i] is None
-                                  else list(sforb[i])),
-                    "nburls": _scalar(snb[i], 0),
-                    "dns_expire_round": _scalar(sexp[i], None),
-                }
-                acts = slot_logic.route_take(slot, rows[i:j], cfg_b, rnd)
-                actions[i:j] = [a for a, _ in acts]
-                errs[i:j] = [e for _, e in acts]
-            pdf["action"] = actions
-            pdf["err"] = errs
-            pdf["s_ip_hash"] = pdf["s_ip_hash"].fillna(0).astype("int32")
-            return pdf[[f.name for f in ROUTED_SCHEMA]]
-
-        routed, bstats = _slot_pass(
-            take, phase_b, ROUTED_SCHEMA, ["cls", "action"],
-            cap=lambda d: self._cap("B_routed", d))
-
-        queues = st.queues.join(routed.select("qseq"), "qseq", "left_anti")
-
-        wb = Window.orderBy("take_rank")
-        bounced = (routed.filter(F.col("action") == slot_logic.A_BOUNCE)
+        # the sequence numbers are ranks over the checkpoint, under the
+        # orders the oracle assigns them in
+        took = bc.filter(F.col("kind") == "take")
+        wt = Window.orderBy("take_rank")
+        bounced = (took.filter(F.col("action") == slot_logic.A_BOUNCE)
                    .withColumn("queue",
                                F.when(F.col("cls").startswith("priority"),
                                       "priority_wait").otherwise("disk_wait"))
-                   .withColumn("qseq", F.row_number().over(wb) - 1
+                   .withColumn("qseq", F.row_number().over(wt) - 1
                                + F.lit(C["qseq_next"]))
                    .select(*QUEUE_SCHEMA.names))
         queues = queues.unionByName(bounced)
-
-        fifo_new = (routed.filter(F.col("action") == slot_logic.A_FIFO)
-                    .withColumn("fifo_pos", F.col("take_rank"))
-                    .select(*SITE_FIFO_SCHEMA.names))
-        site_fifo = st.site_fifo.unionByName(fifo_new)
-
-        wt = Window.orderBy("take_rank")
-        transfers_b = (routed.filter(F.col("action") == slot_logic.A_TRANSFER)
-                       .withColumn("ip_hash", F.col("s_ip_hash"))
+        transfers_b = (took.filter(F.col("action") == slot_logic.A_TRANSFER)
                        .withColumn("transfer_seq",
                                    F.row_number().over(wt) - 1
                                    + F.lit(C["transfer_seq_next"]))
                        .select(*IP_QUEUE_SCHEMA.names))
+        log_b = (took.filter(F.col("action") == slot_logic.A_FORGET)
+                 .select(F.lit(rnd).alias("round"), "url",
+                         F.col("err").alias("error")))
 
-        # phase-B counter moves, from the counts that rode the routing
-        # pass (the literals above read the pre-move counters). No
+        # phase-B counter moves, from the counts that rode the pass
+        # (the literals above read the pre-move counters). No
         # read_pw/read_w decrement: taken rows leave the queue table
         # (anti-join above), so `qseq < watermark` keeps selecting
         # exactly the not-yet-taken valve-open set
         n_bounce = n_transfer_b = n_fifo_b = 0
-        for (c, a), n in bstats.items():
+        for (kind, c, a), n in counts.items():
+            if kind != "take":
+                continue
             C["take_next"] += n
             C[f"n_{c}"] -= n
             if a == slot_logic.A_BOUNCE:
@@ -535,29 +455,67 @@ class RoundRunner:
         C["n_ip_queue"] += n_transfer_b
         C["transfer_seq_next"] += n_transfer_b
 
-        log_b = (routed.filter(F.col("action") == slot_logic.A_FORGET)
+        # ---------- phase C: DNS + robots ----------
+        # The pass resolved every queued slot as if it were selected:
+        # exact, because that step reads only its own slot and the
+        # dims. The dns_per_round cap keeps the first slots in DNS-queue
+        # order (proc_rank, one bounded window over the queued slots);
+        # the others keep their post-B fifo and state.
+        heads = bc.filter(F.col("kind") == "head").withColumn(
+            "proc_rank", F.row_number().over(Window.orderBy("dns_queue_pos")))
+        fifo = bc.filter(F.col("kind") == "fifo")
+        if cfg.dns_per_round:
+            heads = heads.filter(F.col("proc_rank") <= cfg.dns_per_round)
+            fifo = fifo.join(F.broadcast(heads.select(
+                "slot_id", F.lit(True).alias("picked"))), "slot_id", "left")
+            picked = F.coalesce(F.col("picked"), F.lit(False))
+            # the as-if-selected counts include dropped slots: the
+            # capped path pays one count, as the fetch cap does
+            cstats = {r["action"]: r["count"] for r in
+                      fifo.filter(picked).groupBy("action").count().collect()}
+        else:
+            picked = F.lit(True)
+            cstats = {a: n for (kind, _c, a), n in counts.items()
+                      if kind == "fifo"}
+        n_transfer_c = cstats.get(slot_logic.A_TRANSFER, 0)
+        n_forget_c = cstats.get(slot_logic.A_FORGET, 0)
+
+        # transfers rank after phase B's, by DNS-queue then fifo order
+        wtr = Window.orderBy("dns_queue_pos", "fifo_pos")
+        transfers_c = (fifo.filter(picked & (F.col("action")
+                                             == slot_logic.A_TRANSFER))
+                       .withColumn("transfer_seq",
+                                   F.row_number().over(wtr) - 1
+                                   + F.lit(C["transfer_seq_next"]))
+                       .select(*IP_QUEUE_SCHEMA.names))
+        log_c = (fifo.filter(picked & (F.col("action") == slot_logic.A_FORGET))
                  .select(F.lit(rnd).alias("round"), "url",
                          F.col("err").alias("error")))
+        C["transfer_seq_next"] += n_transfer_c
+        C["n_site_fifo"] -= n_transfer_c + n_forget_c
+        C["n_ip_queue"] += n_transfer_c
+        # every fifo row went through the pass: the new fifo is the
+        # unselected slots' rows plus the selected slots' stays
+        site_fifo = (fifo.filter(~picked | (F.col("action")
+                                            == slot_logic.A_STAY))
+                     .select(*SITE_FIFO_SCHEMA.names))
 
-        bdelta = routed.groupBy("slot_id").agg(
-            F.sum(F.when(F.col("action").isin(
-                slot_logic.A_FIFO, slot_logic.A_TRANSFER), 1)
-                .otherwise(0)).cast("int").alias("nb_delta"),
-            F.min(F.when(F.col("action") == slot_logic.A_FIFO,
-                         F.col("take_rank"))).alias("first_fifo_rank"))
-        new_ids = bdelta.join(st.slots.select("slot_id"), "slot_id", "left_anti")
-        slots = st.slots.unionByName(_defaults_for_new_slots(new_ids))
-        dns_entry = (F.lit(rnd * 2).cast("long") * F.lit(1 << 32)
-                     + F.col("first_fifo_rank"))
-        slots = (slots.join(F.broadcast(bdelta), "slot_id", "left")
-                 .withColumn("nburls",
-                             F.col("nburls") + F.coalesce("nb_delta", F.lit(0)))
-                 .withColumn("dns_queue_pos",
-                             F.when(F.col("dns_queue_pos").isNull()
-                                    & F.col("first_fifo_rank").isNotNull(),
-                                    dns_entry)
-                             .otherwise(F.col("dns_queue_pos")))
-                 .select(*SLOTS_SCHEMA.names))
+        # slot states: a selected slot takes its post-C state and
+        # re-queues behind this round's DNS queue if its fifo kept rows;
+        # every other touched slot takes its post-B state
+        state_cols = [F.col("s_" + f.name).alias(f.name) for f in _SLOT_STATE]
+        requeue_pos = (F.lit(rnd * 2 + 1).cast("long") * F.lit(1 << 32)
+                       + F.col("proc_rank"))
+        touched = bc.filter(F.col("kind") == "slot")
+        new_states = (touched.join(F.broadcast(heads.select("slot_id")),
+                                   "slot_id", "left_anti")
+                      .select("slot_id", "dns_queue_pos", *state_cols)
+                      .unionByName(heads.select(
+                          "slot_id", F.when(F.col("requeue"), requeue_pos)
+                          .alias("dns_queue_pos"), *state_cols)))
+        slots = (st.slots.join(F.broadcast(touched.select("slot_id")),
+                               "slot_id", "left_anti")
+                 .unionByName(new_states))
 
         # Background checkpoints run on this one pool, overlapped with
         # the serial phases: slots and site_fifo from phase C until
@@ -569,17 +527,8 @@ class RoundRunner:
         # alive on a non-daemon thread.
         ex = ThreadPoolExecutor(max_workers=3)
         try:
-            # ---------- phase C: DNS + robots ----------
-            (slots, site_fifo, transfers_c, log_c,
-             cstats) = self._phase_c(
-                slots, site_fifo, rnd, C["transfer_seq_next"])
-            n_transfer_c = cstats.get(slot_logic.A_TRANSFER, 0)
-            n_forget_c = cstats.get(slot_logic.A_FORGET, 0)
-            C["transfer_seq_next"] += n_transfer_c
-            C["n_site_fifo"] -= (n_transfer_c + n_forget_c)
-            C["n_ip_queue"] += n_transfer_c
-            # the two phase-C outputs are independent plans over the
-            # checkpointed `resolved`; neither is read before phase E
+            # slots and site_fifo are lazy plans over the pass
+            # checkpoint (and st.slots); neither is read before phase E
             f_slots = ex.submit(_lc, slots)
             f_fifo = ex.submit(_lc, site_fifo)
             ip_queue = (st.ip_queue.unionByName(transfers_b)
@@ -718,7 +667,7 @@ class RoundRunner:
         # + newly discovered links; removes = every routed take's qseq
         # (qseq is never reused, so the tombstone anti-join is exact)
         _acc("queues_add", bounced.unionByName(links_enqueued))
-        _acc("queues_rm", routed.select("qseq"))
+        _acc("queues_rm", take.select("qseq"))
         _acc("fetch_log", log_new)
         _acc("ordering", ordering_new)
         _acc("metrics", metrics_e)
@@ -728,196 +677,129 @@ class RoundRunner:
         C["round"] = rnd + 1
         return CrawlState(new_tables, C, deltas)
 
-    # ---------------- phase C ----------------
+    # ---------------- phases B + C: the per-slot pass ----------------
 
-    def _phase_c(self, slots: DataFrame, site_fifo: DataFrame, rnd: int,
-                 transfer_base: int):
-        """transfer_base: the post-phase-B transfer_seq_next, the
-        offset of this phase's transfers. Returns the lazy slot,
-        site_fifo, transfer and log frames plus the {action: rows}
-        counts of the fifo scan."""
+    def _slot_steps(self, st: CrawlState, take: DataFrame, rnd: int):
+        """One per-slot pass for phases B and C. Larbin routes a taken
+        URL into its NamedSite and then resolves that site's DNS and
+        robots (site.cxx:136-207, 395-496): both steps act on one slot,
+        so one pandas pass applies them slot by slot. Its input is the
+        take unioned with the site fifo (every fifo row belongs to a
+        slot queued for DNS), each row carrying its slot's state and
+        its host's dim rows. Returns the checkpointed SLOT_PASS_SCHEMA
+        frame and its {(kind, cls, action): rows} counts."""
         cfg = self.cfg
-        queued = slots.filter(F.col("dns_queue_pos").isNotNull())
-        if cfg.dns_per_round:
-            queued = queued.orderBy("dns_queue_pos").limit(cfg.dns_per_round)
-        queued = queued.withColumn(
-            "proc_rank",
-            F.row_number().over(Window.orderBy("dns_queue_pos")))
-
-        # FUSED phase C (stage-count matters: the previous form —
-        # per-slot head window + dim joins + robots ArrowEvalPython +
-        # a checkpointed `heads` frame + a second scan join — was ~20
-        # of the round's Spark jobs; an iterative driver pays that
-        # span EVERY round at any cluster size). One inner broadcast
-        # join attaches the queued-slot metadata (which also does the
-        # semi filter), two broadcast joins attach the host/robots
-        # dims per ROW, and the single bucketed Arrow pass below
-        # resolves the head (min fifo_pos, newId), computes the DNS
-        # outcome, parses robots (kernels/robots.py, same kernel the
-        # old UDF wrapped) and runs the fifo scan — emitting the
-        # slot-constant head metadata on every row so the slot update
-        # is one aggregation over `resolved`, no `heads` frame at all.
-        qmeta = queued.select(
-            "slot_id", "proc_rank",
-            F.col("forbidden").alias("old_forbidden"), "dns_queue_pos")
+        rows = (take.withColumn("kind", F.lit("take"))
+                .unionByName(st.site_fifo.withColumn("kind", F.lit("fifo")),
+                             allowMissingColumns=True)
+                .withColumn("puny", _puny_col(cfg, F.col("host"))))
+        # SCALE: the slot space is config-widened to ~10^8 rows
+        # (~10 GB) at the north-rule frontier (SCALE.md §1), so the
+        # FULL slot table must never be broadcast. The pass input is
+        # bounded (the take by the sequencer budget, the fifo by the
+        # in-RAM budget): semi-join the slots down to its distinct
+        # slot_ids first (broadcasting that small side), then
+        # broadcast only the reduced slot rows.
+        slot_state = (st.slots.select(
+            "slot_id", *[F.col(c).alias("s_" + c)
+                         for c in SLOTS_SCHEMA.names[1:]])
+            .join(F.broadcast(rows.select("slot_id").distinct()),
+                  "slot_id", "left_semi"))
         hosts = self.dims["hosts"].select(
             F.col("host").alias("puny"), "dns_ok", "ip")
         robots = self.dims["robots"].select(
             F.col("host").alias("puny"),
             F.col("status").alias("rob_status"),
             F.col("body").alias("rob_body"),
-            F.coalesce(F.col("reachable"), F.lit(True)).alias("rob_reachable"))
-        scan_in = (site_fifo.join(F.broadcast(qmeta), "slot_id")
-                   .withColumn("puny", _puny_col(cfg, F.col("host")))
-                   .join(F.broadcast(hosts), "puny", "left")
-                   .join(F.broadcast(robots), "puny", "left"))
-        ignore_robots = cfg.ignore_robots
-        user_agent = cfg.user_agent
-        ip_slot_size = cfg.ip_site_list_size
+            F.col("reachable").alias("rob_reachable"))
+        rows = (rows.join(F.broadcast(slot_state), "slot_id", "left")
+                .join(F.broadcast(hosts), "puny", "left")
+                .join(F.broadcast(robots), "puny", "left"))
 
-        def phase_c_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-            # bucket-level pass (see _slot_pass): sort once, walk
-            # per-slot spans; head metadata comes from the first row
-            # of each span (min fifo_pos = the reference's newId)
-            from ..kernels.hashes import ip_hash
-            from ..kernels.robots import parse_robots
-            pdf = (pdf.sort_values(["slot_id", "fifo_pos"])
+        cfg_b = {"max_urls_by_site": cfg.max_urls_by_site,
+                 "ignore_robots": cfg.ignore_robots}
+        user_agent, ip_size = cfg.user_agent, cfg.ip_site_list_size
+        expire = rnd + self.expire_rounds
+        names = SLOT_PASS_SCHEMA.names
+        url_cols = SITE_FIFO_SCHEMA.names[:-1]   # url .. slot_id
+
+        def slot_steps(pdf: pd.DataFrame) -> pd.DataFrame:
+            # one call per bucket of slots (see _slot_pass): sort once,
+            # then walk per-slot spans with pure-Python slot state; in
+            # a span the fifo rows (by fifo_pos) precede the take rows
+            # (by take_rank)
+            pos = pdf["fifo_pos"].where(pdf["kind"] == "fifo",
+                                        pdf["take_rank"])
+            pdf = (pdf.assign(_pos=pos)
+                   .sort_values(["slot_id", "kind", "_pos"])
                    .reset_index(drop=True))
-            rows = pdf[["puny", "port", "path"]].to_dict("records")
-            dns_ok = pdf["dns_ok"].tolist()
-            ips = pdf["ip"].tolist()
-            rstat = pdf["rob_status"].tolist()
-            rbody = pdf["rob_body"].tolist()
-            rreach = pdf["rob_reachable"].tolist()
-            oldforb = pdf["old_forbidden"].tolist()
+            recs = pdf.astype(object).where(pdf.notna(), None) \
+                .to_dict("records")
+            out = []
 
-            def _null(v):
-                return v is None or v != v
-            n = len(rows)
-            actions = [None] * n
-            errs = [None] * n
-            head_puny = [None] * n
-            head_port = [0] * n
-            outc = [None] * n
-            effs = [None] * n
-            iph = [0] * n
+            def emit(kind, r, **kw):
+                row = dict.fromkeys(names)
+                if r is not None:
+                    row.update((c, r[c]) for c in url_cols)
+                row["kind"] = kind
+                row.update(kw)
+                out.append(row)
+
             for i, j in _slot_spans(pdf["slot_id"].to_numpy()):
-                hp, hport = rows[i]["puny"], int(rows[i]["port"])
-                if _null(dns_ok[i]) or not dns_ok[i]:
-                    outcome = slot_logic.ERROR_DNS
-                elif not (True if _null(rreach[i]) else rreach[i]):
-                    outcome = slot_logic.NOCONN_DNS
-                else:
-                    outcome = slot_logic.DONE_DNS
-                robots_2xx = (not _null(rstat[i])
-                              and 200 <= int(rstat[i]) < 300)
-                # parsed on 2xx, else the old list survives (the
-                # reference only recycles inside parseRobots)
-                if robots_2xx:
-                    eff = (parse_robots(rbody[i] or "", user_agent)
-                           if outcome == slot_logic.DONE_DNS else None)
-                else:
-                    eff = (None if oldforb[i] is None
-                           else list(oldforb[i]))
-                new_ip = (ip_hash(ips[i], ip_slot_size)
-                          if outcome == slot_logic.DONE_DNS
-                          and not _null(ips[i]) else 0)
+                span = recs[i:j]
+                slot = dict(slot_logic.NEW_SLOT)
+                for k, v in slot.items():
+                    got = span[0]["s_" + k]
+                    if got is not None:
+                        slot[k] = (list(got) if k == "forbidden" else
+                                   got if isinstance(v, str) else int(got))
+                fifo = [r for r in span if r["kind"] == "fifo"]
+                takes = [r for r in span if r["kind"] == "take"]
+                # phase B: route the take (putGenericUrl)
+                nb = slot["nburls"]
+                for r, (a, e) in zip(takes, slot_logic.route_take(
+                        slot, takes, cfg_b, rnd)):
+                    emit("take", r, take_rank=int(r["take_rank"]),
+                         cls=r["cls"], action=a, err=e,
+                         ip_hash=slot["ip_hash"])
+                    if a in (slot_logic.A_FIFO, slot_logic.A_TRANSFER):
+                        nb += 1
+                    if a == slot_logic.A_FIFO:
+                        r["fifo_pos"] = r["take_rank"]
+                        fifo.append(r)
+                qpos = slot["dns_queue_pos"]
+                if qpos is None and fifo:
+                    qpos = (rnd * 2 << 32) + int(fifo[0]["take_rank"])
+                state = {"s_" + k: v for k, v in slot.items()
+                         if k not in ("nburls", "dns_queue_pos")}
+                emit("slot", None, slot_id=int(span[0]["slot_id"]),
+                     dns_queue_pos=qpos, s_nburls=nb, **state)
+                if not fifo:
+                    continue
+                # phase C: newId from the fifo head, its DNS answer and
+                # robots, then robotsResult / dnsErr over the fifo
+                head = fifo[0]
+                outcome, forbidden, ip = slot_logic.resolve_head(
+                    head, slot["forbidden"], user_agent, ip_size)
                 acts = slot_logic.resolve_fifo(
-                    hp, hport, outcome, eff, ignore_robots, rows[i:j])
-                actions[i:j] = [a for a, _ in acts]
-                errs[i:j] = [e for _, e in acts]
-                head_puny[i:j] = [hp] * (j - i)
-                head_port[i:j] = [hport] * (j - i)
-                outc[i:j] = [outcome] * (j - i)
-                effs[i:j] = [eff] * (j - i)
-                iph[i:j] = [new_ip] * (j - i)
-            pdf["action"] = actions
-            pdf["err"] = errs
-            pdf["head_puny"] = head_puny
-            pdf["head_port"] = pd.Series(head_port, dtype="int32")
-            pdf["outcome"] = outc
-            pdf["eff_forbidden"] = effs
-            pdf["new_ip_hash"] = pd.Series(iph, dtype="int32")
-            return pdf[[f.name for f in RESOLVED_SCHEMA]]
+                    head["puny"], int(head["port"]), outcome, forbidden,
+                    cfg_b["ignore_robots"], fifo)
+                for r, (a, e) in zip(fifo, acts):
+                    emit("fifo", r, fifo_pos=int(r["fifo_pos"]),
+                         dns_queue_pos=qpos, action=a, err=e, ip_hash=ip)
+                n_forget = sum(a == slot_logic.A_FORGET for a, _ in acts)
+                emit("head", None, slot_id=int(head["slot_id"]),
+                     dns_queue_pos=qpos,
+                     requeue=any(a == slot_logic.A_STAY for a, _ in acts),
+                     s_name=head["puny"], s_port=int(head["port"]),
+                     s_dns_state=outcome, s_forbidden=forbidden,
+                     s_nburls=nb - n_forget, s_dns_expire_round=expire,
+                     s_ip_hash=ip)
+            return pd.DataFrame(out, columns=names, dtype=object)
 
-        resolved, cstats = _slot_pass(scan_in, phase_c_scan,
-                                      RESOLVED_SCHEMA, ["action"])
-
-        # transfers (ordered after phase-B transfers)
-        wtr = Window.orderBy("dns_queue_pos", "fifo_pos")
-        transfers_c = (resolved.filter(F.col("action") == slot_logic.A_TRANSFER)
-                       .withColumn("ip_hash", F.col("new_ip_hash"))
-                       .withColumn("transfer_seq",
-                                   F.row_number().over(wtr) - 1
-                                   + F.lit(transfer_base))
-                       .select(*IP_QUEUE_SCHEMA.names))
-
-        log_c = (resolved.filter(F.col("action") == slot_logic.A_FORGET)
-                 .select(F.lit(rnd).alias("round"), "url",
-                         F.col("err").alias("error")))
-
-        # fifo: stays survive, everything else leaves. The slot set of
-        # `resolved` is exactly the queued set restricted to slots with
-        # fifo rows, so anti-joining against the (already bounded,
-        # already broadcast) `queued` slot list removes the same rows
-        # without a distinct-shuffle over resolved.
-        stays = resolved.filter(F.col("action") == slot_logic.A_STAY)
-        site_fifo_new = (site_fifo
-                         .join(F.broadcast(queued.select("slot_id")),
-                               "slot_id", "left_anti")
-                         .unionByName(stays.select(*SITE_FIFO_SCHEMA.names)))
-
-        # slot updates: ONE aggregation over the checkpointed
-        # `resolved` (head metadata is slot-constant, min_by fifo_pos
-        # reads it off the head row) — replaces the old heads-frame
-        # join
-        cdelta = resolved.groupBy("slot_id").agg(
-            F.sum(F.when(F.col("action") == slot_logic.A_FORGET, -1)
-                  .otherwise(0)).cast("int").alias("nb_delta"),
-            F.sum(F.when(F.col("action") == slot_logic.A_STAY, 1)
-                  .otherwise(0)).alias("n_stay"),
-            F.min_by("head_puny", "fifo_pos").alias("head_puny"),
-            F.min_by("head_port", "fifo_pos").alias("head_port"),
-            F.min_by("outcome", "fifo_pos").alias("outcome"),
-            F.min_by("eff_forbidden", "fifo_pos").alias("eff_forbidden"),
-            F.min_by("new_ip_hash", "fifo_pos").alias("new_ip_hash"),
-            F.min_by("proc_rank", "fifo_pos").alias("proc_rank"))
-        upd = (cdelta
-               .select(
-                   "slot_id",
-                   F.col("head_puny").alias("u_name"),
-                   F.col("head_port").alias("u_port"),
-                   F.col("outcome").alias("u_dns_state"),
-                   F.col("eff_forbidden").alias("u_forbidden"),
-                   F.coalesce("nb_delta", F.lit(0)).alias("u_nb_delta"),
-                   F.when(F.coalesce("n_stay", F.lit(0)) > 0,
-                          F.lit(rnd * 2 + 1).cast("long") * F.lit(1 << 32)
-                          + F.col("proc_rank"))
-                   .otherwise(F.lit(None).cast("long")).alias("u_dns_queue_pos"),
-                   F.lit(rnd + self.expire_rounds).alias("u_dns_expire_round"),
-                   F.col("new_ip_hash").alias("u_ip_hash"),
-                   F.lit(True).alias("u_processed")))
-        slots_new = (slots.join(F.broadcast(upd), "slot_id", "left")
-                     .select(
-                         "slot_id",
-                         F.when(F.col("u_processed"), F.col("u_name"))
-                         .otherwise(F.col("name")).alias("name"),
-                         F.when(F.col("u_processed"), F.col("u_port"))
-                         .otherwise(F.col("port")).cast("int").alias("port"),
-                         F.when(F.col("u_processed"), F.col("u_dns_state"))
-                         .otherwise(F.col("dns_state")).alias("dns_state"),
-                         F.when(F.col("u_processed"), F.col("u_forbidden"))
-                         .otherwise(F.col("forbidden")).alias("forbidden"),
-                         (F.col("nburls") + F.coalesce("u_nb_delta", F.lit(0)))
-                         .cast("int").alias("nburls"),
-                         F.when(F.col("u_processed"), F.col("u_dns_queue_pos"))
-                         .otherwise(F.col("dns_queue_pos")).alias("dns_queue_pos"),
-                         F.when(F.col("u_processed"), F.col("u_dns_expire_round"))
-                         .otherwise(F.col("dns_expire_round")).cast("int")
-                         .alias("dns_expire_round"),
-                         F.when(F.col("u_processed"), F.col("u_ip_hash"))
-                         .otherwise(F.col("ip_hash")).cast("int").alias("ip_hash")))
-        return (slots_new, site_fifo_new, transfers_c, log_c, cstats)
+        return _slot_pass(rows, slot_steps, SLOT_PASS_SCHEMA,
+                          ["kind", "cls", "action"],
+                          cap=lambda d: self._cap("B_routed", d))
 
     # ---------------- phase E ----------------
 
@@ -1266,15 +1148,20 @@ class RoundRunner:
         links = links.join(slots_now, "l_slot_id", "left")
         ff = ((F.col("ff_name") == F.col("l_host"))
               & (F.col("ff_port") == F.col("l_port")))
-        links = links.withColumn(
-            "gate_err",
-            F.when(F.col("gate_err").isNotNull(), F.col("gate_err"))
-            .when(ff & (F.col("ff_state") == slot_logic.ERROR_DNS), "fastNoDns")
-            .when(ff & (F.col("ff_state") == slot_logic.NOCONN_DNS), "fastNoConn")
-            .when(ff & (F.col("ff_state") == slot_logic.DONE_DNS)
-                  & ~robots_allowed_udf("l_path", F.col("ff_forbidden"),
-                                        F.lit(bool(cfg.ignore_robots))),
-                  "fastRobots"))
+        gate = (F.when(F.col("gate_err").isNotNull(), F.col("gate_err"))
+                .when(ff & (F.col("ff_state") == slot_logic.ERROR_DNS),
+                      "fastNoDns")
+                .when(ff & (F.col("ff_state") == slot_logic.NOCONN_DNS),
+                      "fastNoConn"))
+        if not cfg.ignore_robots:
+            # testRobots in the JVM: each disallow pattern as its exact
+            # anchored regex (functions/exprs.robots_regex); a NULL
+            # list forbids nothing
+            gate = gate.when(
+                ff & (F.col("ff_state") == slot_logic.DONE_DNS)
+                & F.expr("exists(ff_robots_re, r -> l_path rlike r)"),
+                "fastRobots")
+        links = links.withColumn("gate_err", gate)
 
         # checkpoint the gated link stream ONCE (all rows, slim
         # columns, gate_err included, ff_* dropped): every downstream
@@ -1385,4 +1272,4 @@ class RoundRunner:
             F.col("slot_id").alias("l_slot_id"),
             F.col("name").alias("ff_name"), F.col("port").alias("ff_port"),
             F.col("dns_state").alias("ff_state"),
-            F.col("forbidden").alias("ff_forbidden"))
+            F.transform("forbidden", robots_regex).alias("ff_robots_re"))

@@ -12,7 +12,8 @@ log.
 The same round's link chain (E_links, E_survivors) must cross into
 Python once: the extract mapInPandas also applies filter1 and emits
 the slot and seen-bucket keys, so none of the per-key UDFs may
-reappear as a separate Arrow evaluation over the link stream."""
+reappear as a separate Arrow evaluation over the link stream. Phases
+B and C cross once too, in the per-slot pass (B_routed)."""
 
 import contextlib
 import io
@@ -83,6 +84,22 @@ def test_fetch_join_never_broadcasts_documents(plan_probe):
               if c.startswith("_cur_") or c == "_ctext"
               or c in CURATION_SIG_NAMES]
     assert not leaked, leaked
+
+
+def test_round_python_crossings(plan_probe):
+    """Phases B and C are one per-slot pandas pass with the slot key
+    computed JVM-side, and the link stream's robots gate is a JVM
+    regex: no pandas UDF evaluates over either, and no round probe
+    names the two UDFs these replaced."""
+    routed = _formatted_plan(plan_probe["B_routed"])
+    assert len(re.findall(r"FlatMapGroupsInPandas[^\n(]*\(\d+\)",
+                          routed)) == 1, routed
+    assert "ArrowEvalPython" not in routed, routed
+    assert "ArrowEvalPython" not in _formatted_plan(plan_probe["E_links"])
+    for stage, df in plan_probe.items():
+        plan = _formatted_plan(df)
+        for udf in ("site_hash_udf", "robots_allowed_udf"):
+            assert udf not in plan, (stage, udf)
 
 
 def test_link_chain_crosses_python_once(plan_probe):

@@ -2,7 +2,7 @@
 parity suite pins the default configuration; this matrix pins the
 conditional code paths (content dedup, site locking, depth reset,
 priority routing, media links, robots bypass, round budgets, the
-filter1 domain and extension lists)."""
+one-slot DNS cap, the filter1 domain and extension lists)."""
 
 import os
 
@@ -25,6 +25,10 @@ CONFIGS = {
     "ignore_robots": dict(ignore_robots=True),
     "budgets": dict(fetch_cap_per_round=7, dns_per_round=3,
                     seq_per_round=40),
+    # one DNS resolution a round: the per-slot pass resolves every
+    # queued slot as if selected, and all but one of those results
+    # are dropped after its checkpoint in every round
+    "dns_cap_one": dict(dns_per_round=1),
     "cookies": dict(use_cookies=True),
     # config-widened slot spaces (the 10^10-scale setting, SCALE.md
     # §1): the Spark-side site/ip hash UDFs must honor the knobs the

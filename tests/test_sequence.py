@@ -1,9 +1,14 @@
 """assign_global_seq vs a single-partition row_number oracle: the
 two-phase distributed rank must reproduce the exact global sequence
 for any input partitioning, including duplicate-free orders with
-skewed key distributions and the empty frame."""
+skewed key distributions and the empty frame, and with its counts
+exact when an upstream task attempt fails."""
 
+import os
 import random
+import subprocess
+import sys
+import textwrap
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -176,3 +181,68 @@ def test_group_cumsum_empty(spark):
     out = assign_group_cumsum(df, ["grp"], ["ord"], "v", "cum")
     assert out.count() == 0
     assert dict(out.dtypes)["cum"] == "bigint"
+
+
+def test_exact_under_task_retry(tmp_path):
+    """The rank's counts ride an accumulator on the checkpoint job
+    (operators/sequence.py), so a failed task attempt must not leave
+    its updates behind. A fresh `local[2,2]` session with AQE on (two
+    cores, a task may fail once) ranks a frame whose upstream pandas
+    function fails its first attempt; the ranks must still be dense
+    and equal the row_number oracle, and counts_out exact."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    flag = str(tmp_path / "failed")
+    script = textwrap.dedent(f"""
+        import os, sys
+        sys.path.insert(0, {repo!r})
+        import pandas as pd
+        from pyspark.sql import SparkSession, Window
+        from pyspark.sql import functions as F
+        spark = (SparkSession.builder.master("local[2,2]")
+                 .appName("global-seq-retry")
+                 .config("spark.sql.shuffle.partitions", "4")
+                 .config("spark.sql.adaptive.enabled", "true")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        spark.sparkContext.setLogLevel("OFF")
+        from larbin_spark.operators.sequence import assign_global_seq
+
+        @F.pandas_udf("string")
+        def queue_once(i: pd.Series) -> pd.Series:
+            # the partition holding id 0 fails its first attempt
+            if (i == 0).any():
+                try:
+                    os.close(os.open({flag!r}, os.O_CREAT | os.O_EXCL))
+                except FileExistsError:
+                    pass
+                else:
+                    raise RuntimeError("injected first-attempt failure")
+            return (i % 3 == 0).map({{True: "priority", False: "disk"}})
+
+        df = (spark.range(0, 6000, 1, 3)
+              .selectExpr("id", "cast(id % 50 as long) as fetch_seq",
+                          "cast(id as int) as link_idx")
+              .withColumn("queue", queue_once("id")))
+        counts = {{}}
+        got = assign_global_seq(df, ["fetch_seq", "link_idx"], "qseq", 100,
+                                counts_by=["queue"], counts_out=counts)
+        assert os.path.exists({flag!r}), "no attempt failed"
+        got = sorted((r.fetch_seq, r.link_idx, r.qseq)
+                     for r in got.collect())
+        assert [q for _f, _l, q in got] == list(range(100, 6100))
+        want = sorted(
+            (r.fetch_seq, r.link_idx, r.qseq) for r in df.withColumn(
+                "qseq", F.row_number().over(
+                    Window.orderBy("fetch_seq", "link_idx")) + 99).collect())
+        assert got == want
+        assert counts == {{"total": 6000,
+                           "by": {{"priority": 2000, "disk": 4000}}}}, counts
+        print("ALL_OK")
+        spark.stop()
+    """)
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p)
+    out = subprocess.run([sys.executable, "-c", script], cwd=repo, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert "ALL_OK" in out.stdout
