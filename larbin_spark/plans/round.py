@@ -10,10 +10,13 @@ Phase map (the oracle simulator is the executable spec):
                     parse and fifo scan (site.cxx:212-496); the
                     dns_per_round cap is applied after its checkpoint
   D politeness   -> window row_number per ip_hash bucket
-                    (site.cxx:572-644)
-  E fetch+parse  -> broadcast join against documents + mapInPandas
-                    span link extraction + columnar gates + seen
-                    anti-join (file.cxx, checker.cxx)
+                    (site.cxx:572-644), then fetch_seq by the
+                    two-phase rank; a fetch cap filters that rank
+  E fetch+parse  -> broadcast join against documents, then ONE slim
+                    page-verdict checkpoint per round (no document ->
+                    err40X, content dup) that every consumer reads +
+                    mapInPandas span link extraction + columnar gates
+                    + seen anti-join (file.cxx, checker.cxx)
   F commit       -> localCheckpoint per state table; durable snapshot
                     at the crawl driver's checkpoint cadence
 
@@ -22,9 +25,10 @@ order (qseq / take_rank / fifo_pos / transfer_seq /
 (fetch_seq, link_idx)); nothing depends on partitioning. The global
 row_number windows run ONLY on budget-limited sets (<= sequencer
 budget / <= #ip buckets), so those single-partition windows are
-bounded, not a scalability hole. The one unbounded sequence — qseq
-for per-round new links — uses the two-phase distributed rank
-(operators/sequence.py) under the same (fetch_seq, link_idx) order.
+bounded, not a scalability hole. The unbounded sequences — fetch_seq
+over the #ip-buckets × k fetch set, and qseq for per-round new links
+under the (fetch_seq, link_idx) order — use the two-phase distributed
+rank (operators/sequence.py).
 The heavy stages (slot routing, link extraction, seen anti-join,
 fetch join) shuffle on slot_id / bucket / range and scale out; the
 documents dim and the growing seen / dup_seen sets are never
@@ -181,6 +185,17 @@ def _slot_spans(ids):
     starts = np.flatnonzero(np.r_[True, arr[1:] != arr[:-1]])
     ends = np.r_[starts[1:], arr.size]
     return list(zip(starts.tolist(), ends.tolist()))
+
+
+def _fastfail_slots(slots: DataFrame) -> DataFrame:
+    """The slot state the link-time fast-fail gate reads (initOK,
+    url.cxx:343-391), keyed for the join on the link's slot id, with
+    each robots disallow pattern as its exact anchored regex."""
+    return slots.select(
+        F.col("slot_id").alias("l_slot_id"),
+        F.col("name").alias("ff_name"), F.col("port").alias("ff_port"),
+        F.col("dns_state").alias("ff_state"),
+        F.transform("forbidden", robots_regex).alias("ff_robots_re"))
 
 
 def _lc(df: DataFrame, parts: int = _STATE_PARTITIONS) -> DataFrame:
@@ -470,7 +485,7 @@ class RoundRunner:
                 "slot_id", F.lit(True).alias("picked"))), "slot_id", "left")
             picked = F.coalesce(F.col("picked"), F.lit(False))
             # the as-if-selected counts include dropped slots: the
-            # capped path pays one count, as the fetch cap does
+            # capped path pays one count
             cstats = {r["action"]: r["count"] for r in
                       fifo.filter(picked).groupBy("action").count().collect()}
         else:
@@ -546,34 +561,27 @@ class RoundRunner:
             fetched = self._cap("D_sched", cand.filter(F.col("rn") <= k))
             # (bucket_head, rn) is a unique total order over the fetch
             # set (bucket_head = min transfer_seq of the ip bucket,
-            # unique per bucket; rn unique within). With a per-round cap
-            # the set is bounded, so TakeOrdered + one bounded window is
-            # fine; with cap == 0 the set is #ip-buckets × k and the
-            # bucket count is config-widened at scale (SCALE.md §1), so
-            # rank it with the two-phase distributed scheme instead of a
-            # single-partition window (VERDICT r2 minor).
+            # unique per bucket; rn unique within). The set is
+            # #ip-buckets × k and the bucket count is config-widened at
+            # scale (SCALE.md §1), so it is ranked with the two-phase
+            # distributed scheme, not a single-partition window
+            # (VERDICT r2 minor); its count rides the rank's internal
+            # counts job. A per-round fetch cap keeps the first `cap`
+            # ranks: a filter on the same rank, with no count of its own.
+            from ..operators.sequence import assign_global_seq
             _dcnt: dict = {}
+            fetched = assign_global_seq(
+                fetched, ["bucket_head", "rn"], "fetch_seq",
+                C["fetch_seq_next"], counts_out=_dcnt)
+            n_fetched = _dcnt["total"]
             if cfg.fetch_cap_per_round:
-                fetched = (fetched.orderBy("bucket_head", "rn")
-                           .limit(cfg.fetch_cap_per_round))
-                fetched = fetched.withColumn(
-                    "fetch_seq",
-                    F.row_number().over(Window.orderBy("bucket_head", "rn"))
-                    - 1 + F.lit(C["fetch_seq_next"]))
-            else:
-                from ..operators.sequence import assign_global_seq
-                # counts_out rides the rank's internal counts job, so
-                # the n_fetched action below is only paid on the capped
-                # path
-                fetched = assign_global_seq(
-                    fetched, ["bucket_head", "rn"], "fetch_seq",
-                    C["fetch_seq_next"], counts_out=_dcnt)
+                fetched = fetched.filter(
+                    F.col("fetch_seq")
+                    < C["fetch_seq_next"] + cfg.fetch_cap_per_round)
+                n_fetched = min(n_fetched, cfg.fetch_cap_per_round)
             fetched = _lc(self._cap("D_fetched", fetched.select(
                 "url", "host", "port", "path", "depth", "cookie", "tag",
                 "slot_id", "ip_hash", "transfer_seq", "fetch_seq")))
-            n_fetched = _dcnt.get("total")
-            if n_fetched is None:
-                n_fetched = fetched.count()
             C["fetch_seq_next"] += n_fetched
             C["n_ip_queue"] -= n_fetched
 
@@ -596,7 +604,7 @@ class RoundRunner:
             # link-time fast-fail (initOK) consults slot state as of
             # end of phase C (docs/ROUND_MODEL.md)
             slots, site_fifo = f_slots.result(), f_fifo.result()
-            self.set_fastfail_slots(slots)
+            ff_slots = _fastfail_slots(slots)
             ddelta = fetched.groupBy("slot_id").agg(
                 (-F.count("*")).cast("int").alias("nb_delta"))
             slots = (slots.join(F.broadcast(ddelta), "slot_id", "left")
@@ -611,7 +619,8 @@ class RoundRunner:
             (queues, seen, seen_delta, dup_seen, dup_delta, log_e,
              metrics_e, docs_out_new, curation_new, n_links_new,
              n_success, links_enqueued) = self._phase_e(
-                st, fetched, rnd, C["qseq_next"] + n_bounce, queues, ex)
+                st, fetched, ff_slots, rnd, C["qseq_next"] + n_bounce,
+                queues, ex)
             ip_queue, buckets = f_bounded.result()
         except BaseException:
             ex.shutdown(wait=False, cancel_futures=True)
@@ -803,8 +812,9 @@ class RoundRunner:
 
     # ---------------- phase E ----------------
 
-    def _phase_e(self, st: CrawlState, fetched: DataFrame, rnd: int,
-                 qseq_base: int, queues: DataFrame, ex: ThreadPoolExecutor):
+    def _phase_e(self, st: CrawlState, fetched: DataFrame,
+                 ff_slots: DataFrame, rnd: int, qseq_base: int,
+                 queues: DataFrame, ex: ThreadPoolExecutor):
         cfg, spark = self.cfg, self.spark
         docs_dim = self.dims["documents"]
         set_cookie_col = (F.col("set_cookie")
@@ -830,11 +840,10 @@ class RoundRunner:
         # rungs' serial residual (and that would dominate outright at
         # real page masses). Scan parallelism is the INPUT layout's
         # job, as on a real cluster — fixtures write bounded row
-        # groups (fixtures/webgen.write_parquet). Misses (scheduled
-        # URL with no document = connection-failure analogue,
-        # file.cxx fetch errors) are recovered AFTER the checkpoint
-        # from its bounded url list and unioned back, preserving the
-        # left-outer semantics without a second documents scan.
+        # groups (fixtures/webgen.write_parquet). The join is inner: a
+        # scheduled URL with no document (the connection-failure
+        # analogue, file.cxx fetch errors) gets its err40X from the
+        # verdict frame below, without a second documents scan.
         page_cols = [*fetched.columns,
                      *[f.name for f in docs.schema.fields]]
         pages = (docs.join(F.broadcast(fetched),
@@ -846,11 +855,10 @@ class RoundRunner:
                    | F.lit(bool(cfg.any_type))
                    | (F.lit(bool(cfg.get_image)) & ct.startswith("image")))
         page_class = (
-            F.when(F.col("doc_id").isNull(), "err40X")
             # timeout (types.h:114) preempts ALL parsing incl. 30X:
             # the read deadline (fetch_pipe.cxx:50-72) fires before
             # the status line of a slow server arrives
-            .when(F.coalesce(F.col("d_slow"), F.lit(False)), "timeout")
+            F.when(F.coalesce(F.col("d_slow"), F.lit(False)), "timeout")
             .when((F.col("d_status") >= 300) & (F.col("d_status") < 400), "err30X")
             .when(~((F.col("d_status") >= 200) & (F.col("d_status") < 300)), "err40X")
             .when(~type_ok, "badType")
@@ -887,10 +895,9 @@ class RoundRunner:
                 "x -> coalesce(x.v, ''))"))
             # only the content BUCKET is computed on the payload
             # pass; the dup decision itself (first-occurrence window
-            # + seen-set probe) runs AFTER the checkpoint over a
-            # (fetch_seq, c_bucket) projection — the dup window used
-            # to partition the full payload by c_bucket, a second
-            # full-page-mass exchange per round
+            # + seen-set probe) is part of the verdict below, over
+            # slim keys, so the payload is never partitioned by
+            # c_bucket (a second full-page-mass exchange per round)
             pages = pages.withColumn(
                 "c_bucket",
                 F.when(F.col("page_class") == "ok",
@@ -906,89 +913,75 @@ class RoundRunner:
         # signatures cost ~1.1 s of single-task string scans per ~600
         # pages. All six are computed by the vectorized Arrow pass that
         # finalizes curation_new below.
-        pages = pages.withColumn(
-            "final_error",
-            F.when(F.col("page_class") == "ok", "success")
-            .otherwise(F.col("page_class")))
-        pages = _lc(self._cap("E_pages", pages), self.width)
-        pages_ck = pages
+        pages_ck = _lc(self._cap("E_pages", pages), self.width)
 
-        # ---- misses (scheduled URL with no document row) ----
-        # recovered from the checkpointed hit set's bounded url list
-        # (both anti-join sides <= |fetched|); every derived column
-        # the hits carry is NULL on a miss except the error class
-        miss_fill = []
-        for f0 in pages_ck.schema.fields:
-            if f0.name in fetched.columns:
-                continue
-            if f0.name in ("page_class", "final_error"):
-                miss_fill.append(F.lit("err40X").alias(f0.name))
-            else:
-                miss_fill.append(F.lit(None).cast(f0.dataType)
-                                 .alias(f0.name))
-        miss = (fetched
-                .join(F.broadcast(pages_ck.select("url")), "url",
-                      "left_anti")
-                .select(*fetched.columns, *miss_fill)
-                .select(*pages_ck.columns))
-        pages = pages_ck.unionByName(miss)
-
-        # ---- content-dup decision over PROJECTED keys (O-13) ----
-        # the first-occurrence window and the dup_seen probe read a
-        # (fetch_seq, c_bucket) projection of the checkpoint — never
-        # the payload. dup_seen GROWS without bound and must never be
-        # broadcast: it is probed by a plain (AQE-planned) left join
-        # on the slim keys, like the URL-seen probe below. The bounded
-        # per-round verdict frame is then broadcast back onto pages.
+        # ---- the page verdict, decided once (file.cxx:366-798) ----
+        # One slim row per fetched URL with its fetch-log class
+        # (final_error): the fetched batch left-joined to a broadcast
+        # (fetch_seq, page_class[, c_bucket]) projection of the
+        # checkpoint — both sides <= |fetched|, never the payload — so
+        # a URL with no document row is err40X. Under the content-dup
+        # gate (O-13) the first-occurrence window and the dup_seen
+        # probe run on the same slim keys. dup_seen GROWS without
+        # bound and must never be broadcast: it is probed by a plain
+        # (AQE-planned) left join, like the URL-seen probe below. Only
+        # 'ok' pages carry a c_bucket, so only they reach the test.
+        cls = F.coalesce(F.col("page_class"), F.lit("err40X"))
+        dup_cols = []
+        verdict = fetched.select("fetch_seq", "url").join(
+            F.broadcast(pages_ck.select(
+                "fetch_seq", "page_class",
+                *(["c_bucket"] if cfg.page_no_duplicate else []))),
+            "fetch_seq", "left")
         if cfg.page_no_duplicate:
-            dk = (pages_ck.select("fetch_seq", "c_bucket")
-                  .filter(F.col("c_bucket").isNotNull()))
             dup_hit = (st.dup_seen
                        .select(F.col("bucket").alias("c_bucket"))
                        .withColumn("dup_seen_hit", F.lit(True)))
-            dk = dk.join(dup_hit, "c_bucket", "left")
             wdup = Window.partitionBy("c_bucket").orderBy("fetch_seq")
-            dk = dk.withColumn("dup_rn", F.row_number().over(wdup))
-            dup_ck = _lc(self._cap("E_dupkeys", dk), self.width)
-            pages = pages.join(
-                F.broadcast(dup_ck.select("fetch_seq", "dup_rn",
-                                          "dup_seen_hit")),
-                "fetch_seq", "left")
-            pages = pages.withColumn(
-                "page_class",
-                F.when((F.col("page_class") == "ok")
-                       & (F.coalesce("dup_seen_hit", F.lit(False))
-                          | (F.col("dup_rn") > 1)), "duplicate")
-                .otherwise(F.col("page_class")))
-            pages = pages.withColumn(
-                "final_error",
-                F.when(F.col("page_class") == "ok", "success")
-                .otherwise(F.col("page_class")))
             # testSet sets the bit for the first occurrence even when
-            # the page then fails later gates — dup_ck rows are
-            # exactly the pages that reach the dup test, matching
-            # endInput order
-            dup_new = (dup_ck.filter(
-                (F.col("dup_rn") == 1)
-                & ~F.coalesce("dup_seen_hit", F.lit(False)))
-                .select(F.col("c_bucket").alias("bucket")))
+            # the page then fails later gates; NULL for a page that
+            # never reaches the test
+            verdict = verdict.join(dup_hit, "c_bucket", "left").withColumn(
+                "dup_first", F.when(
+                    F.col("c_bucket").isNotNull(),
+                    (F.row_number().over(wdup) == 1)
+                    & ~F.coalesce("dup_seen_hit", F.lit(False))))
+            cls = (F.when((cls == "ok") & ~F.col("dup_first"), "duplicate")
+                   .otherwise(cls))
+            dup_cols = ["c_bucket", "dup_first"]
+        verdict = _lc(self._cap("E_dupkeys", verdict.select(
+            "fetch_seq", "url",
+            F.when(cls == "ok", "success").otherwise(cls)
+            .alias("final_error"), *dup_cols)), self.width)
+
+        if cfg.page_no_duplicate:
+            dup_new = (verdict.filter(F.col("dup_first"))
+                       .select(F.col("c_bucket").alias("bucket")))
             dup_seen = st.dup_seen.unionByName(dup_new)
         else:
             from .state import SEEN_SCHEMA as _SEEN
             dup_new = spark.createDataFrame([], _SEEN)
             dup_seen = st.dup_seen
 
-        log_e_pages = pages.select(F.lit(rnd).alias("round"), "url",
-                                   F.col("final_error").alias("error"))
-        # the success count reads the checkpointed `pages` frame: run
-        # it in the background, overlapped with the link/gate chain's
+        log_e_pages = verdict.select(F.lit(rnd).alias("round"), "url",
+                                     F.col("final_error").alias("error"))
+        # the success count reads the verdict checkpoint: run it in
+        # the background, overlapped with the link/gate chain's
         # materialization below, and join it after (span cut, VERDICT
         # r3 next-round #5)
         f_nsuccess = ex.submit(
-            lambda: pages.filter(F.col("final_error") == "success").count())
-        docs_out_new = (pages.filter(F.col("final_error") == "success")
-                        .select(F.lit(rnd).alias("round"), "fetch_seq",
-                                "doc_id", "spans", "tag"))
+            lambda: verdict.filter(F.col("final_error") == "success").count())
+        # only successes and redirects go on to output and link
+        # extraction: their page rows are the checkpoint inner-joined
+        # to a broadcast of those verdicts
+        kept = pages_ck.join(
+            F.broadcast(verdict.filter(
+                F.col("final_error").isin("success", "err30X"))
+                .select("fetch_seq", "final_error")),
+            "fetch_seq")
+        ok_pages = kept.filter(F.col("final_error") == "success")
+        docs_out_new = ok_pages.select(F.lit(rnd).alias("round"), "fetch_seq",
+                                       "doc_id", "spans", "tag")
         curation_new = None
         if cfg.curate:
             # all six signatures come from ONE vectorized Arrow pass
@@ -1002,27 +995,13 @@ class RoundRunner:
                 curation_finalize_fn, spans_text_expr,
             )
             from .state import CURATION_SCHEMA
-            # read the HIT side of the checkpoint directly: misses
-            # are never 'success', so the union/anti-join branch is
-            # dead weight here; the post-dup verdict is applied via
-            # the bounded broadcast dup frame (success rows always
-            # carry a non-null dup_rn — c_bucket is non-null for
-            # every pre-dup 'ok' page)
-            cur_src = pages_ck.filter(F.col("final_error") == "success")
-            if cfg.page_no_duplicate:
-                cur_src = (cur_src.join(
-                    F.broadcast(dup_ck.select("fetch_seq", "dup_rn",
-                                              "dup_seen_hit")),
-                    "fetch_seq", "left")
-                    .filter(~(F.coalesce("dup_seen_hit", F.lit(False))
-                              | (F.coalesce("dup_rn", F.lit(1)) > 1))))
-            cur_base = cur_src.select(
+            cur_base = ok_pages.select(
                 F.lit(rnd).alias("round"), "fetch_seq", "doc_id",
                 spans_text_expr("spans").alias("_ctext"))
             # materialize in the background, OVERLAPPED with the
             # link/gate chain below: curation_new and the links
             # checkpoint both read only already-materialized frames
-            # (pages_ck + the broadcast dup verdicts), so their eager
+            # (pages_ck + the broadcast verdicts), so their eager
             # actions are independent — running them serially leaves
             # the cluster idle in each one's scheduling gaps (VERDICT
             # r3 #5 span cut, same pattern as the n_success count).
@@ -1047,12 +1026,12 @@ class RoundRunner:
         # only the link-bearing spans cuts it to the outlink mass.
         link_kinds = ("'anchor','frame','base','media'" if get_image
                       else "'anchor','frame','base'")
-        ex_in = pages.filter(F.col("final_error").isin("success", "err30X")) \
-            .select("fetch_seq", "host", "port", "path", "depth",
-                    F.expr(f"filter(spans, s -> s.kind in ({link_kinds}))")
-                    .alias("spans"),
-                    "redirect_to", "cookie", "set_cookie", "tag",
-                    (F.col("final_error") == "err30X").alias("redir_row"))
+        ex_in = kept.select(
+            "fetch_seq", "host", "port", "path", "depth",
+            F.expr(f"filter(spans, s -> s.kind in ({link_kinds}))")
+            .alias("spans"),
+            "redirect_to", "cookie", "set_cookie", "tag",
+            (F.col("final_error") == "err30X").alias("redir_row"))
 
         # manageUrl's filter1 (file.cxx:329-357) and the two hash
         # keys run in this same pass. filter1 gets the config's
@@ -1135,7 +1114,6 @@ class RoundRunner:
             "gate_err", F.when(F.col("gate_err").isNotNull(), F.col("gate_err"))
             .when(F.col("l_depth") < 0, "tooDeep"))
 
-        slots_now = self._fastfail_slots
         # SCALE: never FORCE-broadcast the slot table onto the link
         # stream — at the widened ~10^8-slot space that is a ~10 GB
         # exchange per round. Unhinted, the planner broadcasts only
@@ -1144,8 +1122,8 @@ class RoundRunner:
         # unbounded link side is hash-joined on l_slot_id, never
         # sorted and never the build for a forced broadcast.
         if cfg.named_site_list_size > (1 << 22):
-            slots_now = slots_now.hint("shuffle_hash")
-        links = links.join(slots_now, "l_slot_id", "left")
+            ff_slots = ff_slots.hint("shuffle_hash")
+        links = links.join(ff_slots, "l_slot_id", "left")
         ff = ((F.col("ff_name") == F.col("l_host"))
               & (F.col("ff_port") == F.col("l_port")))
         gate = (F.when(F.col("gate_err").isNotNull(), F.col("gate_err"))
@@ -1252,7 +1230,7 @@ class RoundRunner:
             .select(F.col("gate_err").alias("error"))
         dup_errors = survivors.filter(F.col("is_dup")) \
             .select(F.lit("urlDup").alias("error"))
-        page_errors = pages.select(F.col("final_error").alias("error"))
+        page_errors = verdict.select(F.col("final_error").alias("error"))
         all_events = gate_errors.unionByName(dup_errors).unionByName(page_errors)
         metrics_e = (all_events
                      .withColumn("partition_id", F.spark_partition_id())
@@ -1266,10 +1244,3 @@ class RoundRunner:
         return (queues, seen, seen_delta, dup_seen, dup_new,
                 log_e_pages, metrics_e, docs_out_new, curation_new,
                 n_links_new, n_success, new_rows)
-
-    def set_fastfail_slots(self, slots: DataFrame) -> None:
-        self._fastfail_slots = slots.select(
-            F.col("slot_id").alias("l_slot_id"),
-            F.col("name").alias("ff_name"), F.col("port").alias("ff_port"),
-            F.col("dns_state").alias("ff_state"),
-            F.transform("forbidden", robots_regex).alias("ff_robots_re"))

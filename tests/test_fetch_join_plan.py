@@ -5,9 +5,11 @@ physical plan of the production pages checkpoint (RoundRunner
 .plan_probe["E_pages"], captured from a real round), with
 auto-broadcast disabled so every BroadcastExchange in the plan comes
 from an explicit hint. The left-outer half (a scheduled URL with no
-document row becomes an err40X page) is recovered after that
-checkpoint; the crawl parity tests pin it against the oracle's fetch
-log.
+document row becomes an err40X page) is the slim page-verdict frame's
+left join after that checkpoint; the crawl parity tests pin it against
+the oracle's fetch log. The page rows that go on (E_links, E_curation)
+read that verdict through one inner broadcast join, with no union and
+no outer join.
 
 The same round's link chain (E_links, E_survivors) must cross into
 Python once: the extract mapInPandas also applies filter1 and emits
@@ -111,3 +113,28 @@ def test_link_chain_crosses_python_once(plan_probe):
         plan = _formatted_plan(plan_probe[stage])
         for udf in ("filter1_udf", "site_hash_udf", "url_bucket_udf"):
             assert udf not in plan, (stage, udf)
+
+
+def _tree_lines(plan: str, node: str):
+    """Tree lines of `node` ('+- BroadcastHashJoin Inner BuildRight
+    (8)'); the details section prints '(8) BroadcastHashJoin'."""
+    return re.findall(rf"{node}[^\n(]*\(\d+\)", plan)
+
+
+def test_pages_read_one_verdict(plan_probe):
+    """Phase E decides each page's class once, in the slim verdict
+    checkpoint: the page rows that go on to link extraction and
+    curation are the pages checkpoint inner-joined to a broadcast of
+    its success/redirect verdicts. No miss union and no second
+    (outer) dup-verdict join may reappear on either path."""
+    for stage in ("E_links", "E_curation"):
+        plan = _formatted_plan(plan_probe[stage])
+        assert not _tree_lines(plan, "Union"), (stage, plan)
+        assert not _tree_lines(plan, "BroadcastHashJoin LeftOuter"), \
+            (stage, plan)
+        assert len(_tree_lines(plan, "BroadcastHashJoin Inner")) == 1, \
+            (stage, plan)
+        # final_error exists only in the verdict; the pages
+        # checkpoint keeps just the pre-dup page_class
+        assert "final_error" in plan, (stage, plan)
+    assert "final_error" not in plan_probe["E_pages"].columns
