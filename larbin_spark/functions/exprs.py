@@ -1,11 +1,13 @@
-"""JVM column expressions for two parity kernels, so the crawl round
-needs no Python crossing for them.
+"""JVM column expressions for three parity kernels, so the crawl
+round and the output modes need no Python crossing for them.
 
 - site_hash_col   == kernels.hashes.site_hash   (url.cxx:40-46)
 - robots_regex    == kernels.robots.robots_match (text.cxx:52-73),
                      as an anchored Java regex for `rlike`
+- render_spans    == kernels.links.render_content
 
-Both are pinned against the scalar kernels in tests/test_kernels.py.
+The first two are pinned against the scalar kernels in
+tests/test_kernels.py, the third in tests/test_output_modes.py.
 """
 
 from __future__ import annotations
@@ -23,6 +25,21 @@ def site_hash_col(host: str, size: int) -> Column:
         f"if(ascii(c) >= 128, ascii(c) - 256, ascii(c))), 0L, "
         f"(h, b) -> (37 * h + b) & 4294967295L), {int(size)}L)"
     ).cast("int")
+
+
+def render_spans(spans: str) -> Column:
+    """The page text the content-dup hash reads, over the span array
+    column named `spans`: payloads concatenated in offset order
+    (media spans contribute media_ref, others text, NULLs as '').
+    Each span is packed as (offset, original index, payload) so the
+    sort is STABLE on offset ties, like Python's sorted; struct
+    comparison never reaches the payload because the index is
+    unique."""
+    return F.concat_ws("", F.expr(
+        f"transform(array_sort(transform({spans}, (s, i) -> "
+        "struct(s.offset as o, i as i, case when s.kind = "
+        "'media' then s.media_ref else s.text end as v))), "
+        "x -> coalesce(x.v, ''))"))
 
 
 def _escape(c: Column) -> Column:

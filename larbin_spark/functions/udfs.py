@@ -74,18 +74,6 @@ def url_bucket_udf(host: pd.Series, port: pd.Series, path: pd.Series,
                      dtype="int64")
 
 
-@pandas_udf(T.IntegerType())
-def site_hash_udf(host: pd.Series, size: pd.Series) -> pd.Series:
-    """siteHashCode % size (O-7 slot key). size is a lit column so the
-    config knob (cfg.named_site_list_size, types.h:35) actually
-    reaches the hash — the oracle simulator honors it, so a hardcoded
-    kernel default would silently diverge on a widened slot space."""
-    from ..kernels.vectorized import site_hash_np
-    if not len(host):  # Arrow may hand a zero-row batch
-        return pd.Series([], dtype="int32")
-    return pd.Series(site_hash_np(host, int(size.iloc[0])), dtype="int32")
-
-
 @pandas_udf(T.BooleanType())
 def filter1_udf(host: pd.Series, path: pd.Series, domains_csv: pd.Series,
                 exts_csv: pd.Series) -> pd.Series:

@@ -17,11 +17,10 @@ hottest key. Three layers of defense, outermost first:
    global per-key top-k by a total order is a subset of the union of
    per-shard top-k's: any row in the true top-k beats all rows below
    it in its own shard too, so it survives phase 1.
-3. `salted_count_distinct_ish` two-phase aggregation for aggregates
-   whose partial form is expensive per key (collect_list-like); for
-   algebraic aggs (sum/count/min/max) Spark's partial aggregation is
-   already the map-side combine and salting adds nothing but a
-   shuffle — documented so nobody "optimizes" those paths backwards.
+3. No salted aggregation: for algebraic aggs (sum/count/min/max)
+   Spark's partial aggregation is already the map-side combine and
+   salting adds nothing but a shuffle — documented so nobody
+   "optimizes" those paths backwards.
 
 The politeness window itself (O-9) must NOT be salted: its semantics
 are a global order per ip bucket (SURVEY.md §4). Its inputs are
@@ -66,20 +65,3 @@ def salted_per_key_topk(df: DataFrame, key_cols: Sequence[str],
     return (pruned.withColumn(rank_name, F.row_number().over(final_w))
             .filter(F.col(rank_name) <= k)
             .drop(SALT, SHARD_RANK))
-
-
-def salted_collect_sample(df: DataFrame, key_cols: Sequence[str],
-                          payload_col: str, per_key_cap: int,
-                          n_salts: int = 16) -> DataFrame:
-    """Bounded per-key sample list (e.g. example URLs per host for a
-    lineage report) without shuffling a hot key's full mass to one
-    task: cap per (key, salt) first, then merge the <= cap * n_salts
-    survivors per key and truncate. Deterministic: survivors chosen
-    by ascending payload order."""
-    ranked = salted_per_key_topk(df.select(*key_cols, payload_col),
-                                 key_cols, [payload_col], per_key_cap,
-                                 n_salts, rank_name="__r")
-    return (ranked.groupBy(*key_cols)
-            .agg(F.sort_array(F.collect_list(payload_col))
-                 .alias("sample"),
-                 F.count("*").alias("n_sampled")))

@@ -10,14 +10,14 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..sources.catalog import SnapshotStore
 from .round import RoundRunner
-from .state import COMPACT_EVERY, CrawlState
+from .state import CrawlState, compaction_due
 
 # max rounds between parquet rebases of the in-memory state: the
 # durable snapshot is written asynchronously (see _AsyncCommitter),
 # so between reloads the state tables live as lazy compositions /
 # localCheckpoints; Catalyst size statistics degrade across those
-# layers, and this cap bounds the depth exactly like the
-# snapshot_every <= 16 validation does (plans/round.py phase F).
+# layers (plans/round.py phase F), so this bounds the depth, and it
+# also bounds snapshot_every.
 RELOAD_ROUNDS = 16
 
 
@@ -29,17 +29,27 @@ class _AsyncCommitter:
     one save is in flight; submit() joins the previous one first, so
     delta chains always compose against a completed predecessor and
     any save failure surfaces at the next boundary instead of being
-    lost on a daemon thread."""
+    lost on a daemon thread. Each save prunes the store after its
+    commit."""
 
-    def __init__(self) -> None:
+    def __init__(self, store: SnapshotStore, keep_snapshots: int) -> None:
         from concurrent.futures import ThreadPoolExecutor
         self._ex = ThreadPoolExecutor(max_workers=1,
                                       thread_name_prefix="snap-commit")
         self._fut = None
+        self.store, self.keep = store, keep_snapshots
 
-    def submit(self, fn) -> None:
+    def submit(self, st: CrawlState, rnd: int) -> None:
+        """Save st as snapshot rnd in the background; st hands its
+        pending deltas to the save and goes on with an empty set."""
+        frozen = st.handoff()
+
+        def _save() -> None:
+            frozen.save(self.store, rnd)
+            self.store.prune(keep_last=self.keep)
+
         self.join()
-        self._fut = self._ex.submit(fn)
+        self._fut = self._ex.submit(_save)
 
     def join(self) -> None:
         if self._fut is not None:
@@ -74,34 +84,35 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
     Durable snapshots commit every cfg.snapshot_every round
     boundaries (default 1 = every round) plus a trailing commit at
     exit, so the returned state is always resumable. Resume picks up
-    the latest COMPLETED snapshot exactly. The save is write-behind:
-    it overlaps the next rounds' compute on an ordered background
-    thread (_AsyncCommitter) and is joined at the next boundary — off
-    the round's critical path, like the reference's persistent-fifo
-    flush. Synchronous boundaries (save + reload, which rebases the
-    state plans on parquet and resets Catalyst size statistics,
-    plans/round.py phase F) still happen at every compaction and at
-    least every RELOAD_ROUNDS rounds. Between them the bounded hot
-    tables (ip_queue, buckets) live on the localCheckpoints run_round
-    takes, overlapped with its phase E, and the unbounded ones
-    (queues, seen, dup_seen) stay lazy compositions over the last
-    reload's parquet plus the rounds' already-checkpointed deltas:
-    materializing those would be O(state) per round, defeating the
-    O(delta) commit design.
+    the latest COMPLETED snapshot exactly. Every save, the bootstrap
+    and the trailing one included, is write-behind: it runs on an
+    ordered background thread (_AsyncCommitter), overlapped with the
+    next rounds' compute, like the reference's persistent-fifo flush.
+    A rebase boundary — a save that compacts a delta chain, or
+    RELOAD_ROUNDS rounds since the last reload, or the trailing
+    commit — waits for its save and reloads the state from it, which
+    rebases the state plans on parquet and resets Catalyst size
+    statistics (plans/round.py phase F). Between rebases the bounded
+    hot tables (ip_queue, buckets) live on the localCheckpoints
+    run_round takes, overlapped with its phase E, and the unbounded
+    ones (queues, seen, dup_seen) stay lazy compositions over the
+    last reload's parquet plus the rounds' already-checkpointed
+    deltas: materializing those would be O(state) per round,
+    defeating the O(delta) commit design.
     """
     import tempfile
     import time
     if cfg.snapshot_every < 1:
         raise ValueError("snapshot_every must be >= 1")
-    if cfg.snapshot_every > 16:
+    if cfg.snapshot_every > RELOAD_ROUNDS:
         # between commits the state plans live on localCheckpoint;
         # Catalyst size statistics compound across those layers (see
         # plans/round.py phase F), so an unbounded cadence degrades
         # planning long before it saves meaningful I/O — the commits
         # are already O(delta)
-        raise ValueError("snapshot_every > 16 defeats the statistics "
-                         "reset the parquet round-trip provides; use "
-                         "a small cadence")
+        raise ValueError(f"snapshot_every > {RELOAD_ROUNDS} defeats the "
+                         "statistics reset the parquet round-trip "
+                         "provides; use a small cadence")
     if clock is None:
         clock = time.monotonic
     t_start = clock()
@@ -109,27 +120,19 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
     if store is None:
         store = SnapshotStore(tempfile.mkdtemp(prefix="larbin_snap_"))
 
-    committer = _AsyncCommitter()
+    committer = _AsyncCommitter(store, keep_snapshots)
     rnd = 0
     if resume and store.latest() is not None:
-        last = store.latest()
-        st = CrawlState.load(spark, store, last)
+        st = CrawlState.load(spark, store, store.latest())
         rnd = st.counters["round"]
     else:
-        # write-behind bootstrap (r5): the bootstrap snapshot's 13
-        # table writes are the session's FIRST jobs — run
-        # synchronously they serialize ~10 s of executor-launch +
-        # first-job latency in front of round 0 at every topology
-        # (pure span, measured by the r5 action attribution). Submit
-        # them to the committer instead: they overlap round 0's
-        # compute and are joined at the first boundary. The state
-        # keeps its in-memory seed plans for round 0 (the parquet
-        # rebase + statistics reset happens at the next synchronous
-        # boundary as usual); resumability is unchanged — a crash
-        # before the save lands just resumes from nothing.
-        st = CrawlState.empty(spark)
-        st = runner.seed(st, seeds)
-        _submit_commit(committer, st, store, 0, keep_snapshots)
+        # the bootstrap save overlaps round 0 like any other: its
+        # table writes are the session's FIRST jobs, which run
+        # synchronously would serialize executor launch and first-job
+        # latency in front of round 0. A crash before it lands just
+        # resumes from nothing.
+        st = runner.seed(CrawlState.empty(spark), seeds)
+        committer.submit(st, 0)
 
     committed = rnd
     last_reload = rnd  # the round whose parquet the state plans read
@@ -154,27 +157,27 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
                 break
             st = runner.run_round(st, rnd)
             rnd += 1
-            if rnd % max(1, cfg.snapshot_every) == 0:
+            if rnd % cfg.snapshot_every == 0:
                 # join the in-flight save (it had a full commit window
                 # of rounds to finish, so this is ~free): the
-                # chain-length inspection below reads a quiescent
-                # store and the next save composes its deltas against
-                # a completed predecessor
+                # compaction check reads a quiescent store
                 committer.join()
-                if (rnd - last_reload >= RELOAD_ROUNDS
-                        or _compaction_due(store)):
-                    # synchronous boundary: a compaction rewrites full
-                    # tables from plans based on the LAST reload's
-                    # files, and the rebase right after keeps every
-                    # in-memory plan on files prune cannot expire; the
-                    # periodic rebase also resets Catalyst size
-                    # statistics (phase F)
-                    st = _commit(spark, st, store, rnd, keep_snapshots)
-                    last_reload = rnd
-                else:
-                    _submit_commit(committer, st, store, rnd,
-                                   keep_snapshots)
+                rebase = (rnd - last_reload >= RELOAD_ROUNDS
+                          or compaction_due(store))
+                committer.submit(st, rnd)
                 committed = rnd
+                if rebase:
+                    # the state plans read the last reload's files,
+                    # which a compacting save's prune may expire, and
+                    # their size statistics compound (phase F): go on
+                    # from the saved snapshot
+                    committer.join()
+                    st = CrawlState.load(spark, store, rnd)
+                    last_reload = rnd
+        if committed != rnd:
+            # trailing rounds since the last boundary become durable at
+            # exit, so the returned state is always resumable-from-here
+            committer.submit(st, rnd)
     except BaseException:
         try:
             committer.close()  # the in-flight snapshot stays
@@ -182,62 +185,11 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
             pass               # round's own error with a save's
         raise
     committer.close()
-    # trailing rounds since the last boundary become durable at exit,
-    # so the returned state is always resumable-from-here
-    if committed != rnd:
-        st = _commit(spark, st, store, rnd, keep_snapshots)
-    elif last_reload != rnd:
+    if last_reload != rnd:
         # rebase the returned state onto the durable snapshot: its
         # lazy table plans must not outlive prune's data-dir expiry
         # once the caller holds it past more commits
         st = CrawlState.load(spark, store, rnd)
-    return st
-
-
-def _submit_commit(committer: _AsyncCommitter, st: CrawlState,
-                   store: SnapshotStore, rnd: int,
-                   keep_snapshots: int) -> None:
-    """Hand the boundary state to the background committer. The
-    frozen copy detaches it from the continuing crawl: DataFrames are
-    immutable and run_round rebinds (never mutates) table entries,
-    but counters mutate in place and the deltas dict must transfer
-    ownership — the in-flight save consumes exactly this window's
-    deltas, and the continuing state accumulates the next window's
-    from empty (re-writing them at the next boundary would duplicate
-    rows in the append chains)."""
-    frozen = CrawlState(dict(st.tables), dict(st.counters), st.deltas)
-    st.deltas = {}
-
-    def _save() -> None:
-        frozen.save(store, rnd)
-        store.prune(keep_last=keep_snapshots)
-
-    committer.submit(_save)
-
-
-def _compaction_due(store: SnapshotStore) -> bool:
-    """True when the next save would full-rewrite some table (its
-    delta chain reached COMPACT_EVERY). Those boundaries run
-    synchronously: the rewrite reads the in-memory plans, whose file
-    dependencies date back to the last reload."""
-    prev = store.latest()
-    if prev is None:
-        return True
-    try:
-        tables = store.manifest(prev).get("tables", {})
-    except FileNotFoundError:
-        return True
-    return any(len(chain) >= COMPACT_EVERY for chain in tables.values())
-
-
-def _commit(spark: SparkSession, st: CrawlState, store: SnapshotStore,
-            rnd: int, keep_snapshots: int) -> CrawlState:
-    """Durable snapshot boundary: write the accumulated deltas, then
-    reload so Catalyst's size statistics reset to real file sizes
-    (plans/round.py phase F)."""
-    st.save(store, rnd)
-    st = CrawlState.load(spark, store, rnd)
-    store.prune(keep_last=keep_snapshots)
     return st
 
 

@@ -46,15 +46,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import CrawlConfig
-from ..functions.exprs import robots_regex, site_hash_col
+from ..functions.exprs import render_spans, robots_regex, site_hash_col
 from ..kernels.links import clean_redirect_text, extract_links
 from ..kernels.urlfilter import filter1
 from ..kernels.urlnorm import ParsedUrl, give_base, parse_url, punycode_host
 from ..operators import slot_logic
 from ..operators.sequence import _DictSum, _group_sizes
 from .state import (
-    CrawlState, IP_QUEUE_SCHEMA, QUEUE_SCHEMA, SITE_FIFO_SCHEMA,
-    SLOTS_SCHEMA,
+    CURATION_SCHEMA, IP_QUEUE_SCHEMA, METRICS_SCHEMA, QUEUE_SCHEMA,
+    SEEN_SCHEMA, SITE_FIFO_SCHEMA, SLOTS_SCHEMA, CrawlState,
 )
 
 # The per-slot pass (phases B and C, see run_round) emits one tagged
@@ -275,19 +275,11 @@ class RoundRunner:
                          st.counters["qseq_next"] + len(rows), queue))
         st.counters["qseq_next"] += len(rows)
         spark = self.spark
-        from .state import SEEN_SCHEMA
-        qdf = spark.createDataFrame(rows, QUEUE_SCHEMA)
-        st.tables["queues"] = st.queues.unionByName(qdf)
-        st.deltas["queues_add"] = (
-            st.deltas["queues_add"].unionByName(qdf)
-            if "queues_add" in st.deltas else qdf)
-        st.tables["seen"] = st.seen.unionByName(
-            spark.createDataFrame(seen_new, SEEN_SCHEMA))
+        st.append("queues", spark.createDataFrame(rows, QUEUE_SCHEMA))
+        st.append("seen", spark.createDataFrame(seen_new, SEEN_SCHEMA))
         if n_dup_seeds:
-            from .state import METRICS_SCHEMA
-            st.tables["metrics"] = st.metrics.unionByName(
-                spark.createDataFrame(
-                    [(0, 0, "urlDup", n_dup_seeds)], METRICS_SCHEMA))
+            st.append("metrics", spark.createDataFrame(
+                [(0, 0, "urlDup", n_dup_seeds)], METRICS_SCHEMA))
         return st
 
     def submit(self, st: CrawlState, subs) -> CrawlState:
@@ -327,7 +319,6 @@ class RoundRunner:
         # range-sharded bucket files) — an isin() literal list would
         # inflate the Catalyst plan linearly with the batch size.
         probe = {p[4] for p in parsed}
-        from .state import SEEN_SCHEMA
         probe_df = spark.createDataFrame(
             [(b,) for b in sorted(probe)], SEEN_SCHEMA)
         hits = {r["bucket"] for r in
@@ -347,18 +338,10 @@ class RoundRunner:
             rows.append((u.url, u.host, u.port, u.path, u.depth, None,
                          tag, st.counters["qseq_next"] + len(rows), queue))
         st.counters["qseq_next"] += len(rows)
-        new_tables = dict(st.tables)
-        deltas = dict(st.deltas)
-        qdf = spark.createDataFrame(rows, QUEUE_SCHEMA)
-        new_tables["queues"] = st.queues.unionByName(qdf)
-        deltas["queues_add"] = (deltas["queues_add"].unionByName(qdf)
-                                if "queues_add" in deltas else qdf)
+        st.append("queues", spark.createDataFrame(rows, QUEUE_SCHEMA))
         if new_buckets:
-            bdf = spark.createDataFrame(new_buckets, SEEN_SCHEMA)
-            new_tables["seen"] = st.seen.unionByName(bdf)
-            deltas["seen"] = (deltas["seen"].unionByName(bdf)
-                              if "seen" in deltas else bdf)
-        return CrawlState(new_tables, st.counters, deltas)
+            st.append("seen", spark.createDataFrame(new_buckets, SEEN_SCHEMA))
+        return st
 
     # ---------------- the round ----------------
 
@@ -424,7 +407,6 @@ class RoundRunner:
         # frontier twice per round
         take = _lc(self._cap("B_take", take))
         bc, counts = self._slot_steps(st, take, rnd)
-        queues = st.queues.join(take.select("qseq"), "qseq", "left_anti")
 
         # the sequence numbers are ranks over the checkpoint, under the
         # orders the oracle assigns them in
@@ -437,7 +419,6 @@ class RoundRunner:
                    .withColumn("qseq", F.row_number().over(wt) - 1
                                + F.lit(C["qseq_next"]))
                    .select(*QUEUE_SCHEMA.names))
-        queues = queues.unionByName(bounced)
         transfers_b = (took.filter(F.col("action") == slot_logic.A_TRANSFER)
                        .withColumn("transfer_seq",
                                    F.row_number().over(wt) - 1
@@ -533,8 +514,8 @@ class RoundRunner:
                  .unionByName(new_states))
 
         # Background checkpoints run on this one pool, overlapped with
-        # the serial phases: slots and site_fifo from phase C until
-        # phase E needs the fast-fail slots, ip_queue and buckets from
+        # the serial phases: slots from phase C until phase E needs
+        # the fast-fail slots, ip_queue and buckets from
         # phase D through phase E, and phase E's n_success count and
         # curation finalize. Three workers is the peak overlap (phase
         # E). On any failure, pending work is cancelled and running
@@ -542,10 +523,11 @@ class RoundRunner:
         # alive on a non-daemon thread.
         ex = ThreadPoolExecutor(max_workers=3)
         try:
-            # slots and site_fifo are lazy plans over the pass
-            # checkpoint (and st.slots); neither is read before phase E
+            # slots is a lazy plan over the pass checkpoint and
+            # st.slots, not read before phase E. site_fifo stays a
+            # filter over the pass checkpoint: only the save and the
+            # next round's pass read it
             f_slots = ex.submit(_lc, slots)
-            f_fifo = ex.submit(_lc, site_fifo)
             ip_queue = (st.ip_queue.unionByName(transfers_b)
                         .unionByName(transfers_c))
 
@@ -603,7 +585,7 @@ class RoundRunner:
 
             # link-time fast-fail (initOK) consults slot state as of
             # end of phase C (docs/ROUND_MODEL.md)
-            slots, site_fifo = f_slots.result(), f_fifo.result()
+            slots = f_slots.result()
             ff_slots = _fastfail_slots(slots)
             ddelta = fetched.groupBy("slot_id").agg(
                 (-F.count("*")).cast("int").alias("nb_delta"))
@@ -616,11 +598,10 @@ class RoundRunner:
                                           "fetch_seq", "url", "cookie", "tag")
 
             # ---------- phase E: fetch + parse + link pipeline ----------
-            (queues, seen, seen_delta, dup_seen, dup_delta, log_e,
-             metrics_e, docs_out_new, curation_new, n_links_new,
-             n_success, links_enqueued) = self._phase_e(
-                st, fetched, ff_slots, rnd, C["qseq_next"] + n_bounce,
-                queues, ex)
+            (seen_delta, dup_delta, log_e, metrics_e, docs_out_new,
+             curation_new, n_links_new, n_success,
+             links_enqueued) = self._phase_e(
+                st, fetched, ff_slots, rnd, C["qseq_next"] + n_bounce, ex)
             ip_queue, buckets = f_bounded.result()
         except BaseException:
             ex.shutdown(wait=False, cancel_futures=True)
@@ -636,55 +617,32 @@ class RoundRunner:
         # Catalyst's size statistics to real file sizes -- checkpointed
         # in-memory plans preserve computed stats, so join-size
         # estimates would compound multiplicatively across rounds
-        # (BigInt stats blowup in the planner)
-        new_tables = dict(st.tables)
-        new_tables["queues"] = queues
-        new_tables["site_fifo"] = site_fifo
-        new_tables["ip_queue"] = ip_queue
-        new_tables["slots"] = slots
-        new_tables["buckets"] = buckets
-        new_tables["seen"] = seen
-        new_tables["dup_seen"] = dup_seen
-        log_new = log_b.unionByName(log_c).unionByName(log_e)
-        new_tables["fetch_log"] = st.fetch_log.unionByName(log_new)
-        new_tables["ordering"] = st.ordering.unionByName(ordering_new)
-        new_tables["metrics"] = st.metrics.unionByName(metrics_e)
-        new_tables["docs_out"] = st.tables["docs_out"].unionByName(docs_out_new)
+        # (BigInt stats blowup in the planner). The grow-only tables
+        # and the frontier change by appends and removals, which the
+        # snapshot commits as O(delta) chains (plans/state.py); the
+        # bounded mutable tables are replaced whole.
+        st.tables.update(site_fifo=site_fifo, ip_queue=ip_queue,
+                         slots=slots, buckets=buckets)
+        # the frontier loses every routed take and gains the bounces
+        # and the newly discovered links
+        st.remove("queues", take.select("qseq"))
+        st.append("queues", bounced)
+        st.append("queues", links_enqueued)
+        st.append("seen", seen_delta)
+        st.append("dup_seen", dup_delta)
+        st.append("fetch_log", log_b.unionByName(log_c).unionByName(log_e))
+        st.append("ordering", ordering_new)
+        st.append("metrics", metrics_e)
+        st.append("docs_out", docs_out_new)
         if cfg.curate:
             # inline curation (pipeline/rowsigs): the signatures were
             # materialized by phase E's compute-width finalize pass, so
-            # this union (and the snapshot writer's small-delta
+            # this append (and the snapshot writer's small-delta
             # coalesce) moves only precomputed values — no extra
-            # scan, no shuffle, nothing left for the save to narrow;
-            # the table is append-only so each commit writes only
-            # this round's rows
-            new_tables["curation"] = (st.tables["curation"]
-                                      .unionByName(curation_new))
-        # delta bookkeeping for the append-only snapshot commits:
-        # union with any rows already pending (e.g. submissions that
-        # landed on this state before the round)
-        deltas = dict(st.deltas)
-
-        def _acc(name: str, df: DataFrame) -> None:
-            deltas[name] = (deltas[name].unionByName(df)
-                            if name in deltas else df)
-
-        _acc("seen", seen_delta)
-        _acc("dup_seen", dup_delta)
-        # frontier add/remove deltas for the TOMBSTONED O(delta)
-        # snapshot commit (plans/state.py): adds = bounced re-enqueues
-        # + newly discovered links; removes = every routed take's qseq
-        # (qseq is never reused, so the tombstone anti-join is exact)
-        _acc("queues_add", bounced.unionByName(links_enqueued))
-        _acc("queues_rm", take.select("qseq"))
-        _acc("fetch_log", log_new)
-        _acc("ordering", ordering_new)
-        _acc("metrics", metrics_e)
-        _acc("docs_out", docs_out_new)
-        if cfg.curate:
-            _acc("curation", curation_new)
+            # scan, no shuffle, nothing left for the save to narrow
+            st.append("curation", curation_new)
         C["round"] = rnd + 1
-        return CrawlState(new_tables, C, deltas)
+        return st
 
     # ---------------- phases B + C: the per-slot pass ----------------
 
@@ -814,7 +772,11 @@ class RoundRunner:
 
     def _phase_e(self, st: CrawlState, fetched: DataFrame,
                  ff_slots: DataFrame, rnd: int, qseq_base: int,
-                 queues: DataFrame, ex: ThreadPoolExecutor):
+                 ex: ThreadPoolExecutor):
+        """Fetch, parse and the link pipeline. Returns the round's
+        rows for the state tables it grows — seen, dup_seen, fetch
+        log, metrics, docs_out, curation (None unless curating) and
+        the enqueued links — with n_links_new and n_success."""
         cfg, spark = self.cfg, self.spark
         docs_dim = self.dims["documents"]
         set_cookie_col = (F.col("set_cookie")
@@ -868,10 +830,9 @@ class RoundRunner:
         pages = pages.withColumn("page_class", page_class)
 
         # content-dup gate (hashDup, file.cxx:583-588), in fetch order.
-        # The page text is RENDERED JVM-side (stable offset-order sort
-        # + concat, exactly kernels/links.render_content: media spans
-        # contribute media_ref, others text, nulls as ''), so only the
-        # one rendered string crosses Arrow into Python, where the
+        # The page text is RENDERED JVM-side (functions/exprs
+        # render_spans, exactly kernels/links.render_content), so only
+        # the one rendered string crosses Arrow into Python, where the
         # vectorized content hash runs — the old per-page
         # span-dict conversion + per-byte Python hash was the hot
         # spot of this phase on realistic page masses.
@@ -884,15 +845,6 @@ class RoundRunner:
                 return pd.Series(content_hash_np(rendered, dup_size),
                                  dtype="int64")
 
-            # pack (offset, original index, payload) so the sort is
-            # STABLE on offset ties, like Python's sorted in
-            # render_content; struct comparison never reaches the
-            # payload because the index is unique
-            rendered = F.concat_ws("", F.expr(
-                "transform(array_sort(transform(spans, (s, i) -> "
-                "struct(s.offset as o, i as i, case when s.kind = "
-                "'media' then s.media_ref else s.text end as v))), "
-                "x -> coalesce(x.v, ''))"))
             # only the content BUCKET is computed on the payload
             # pass; the dup decision itself (first-occurrence window
             # + seen-set probe) is part of the verdict below, over
@@ -901,7 +853,7 @@ class RoundRunner:
             pages = pages.withColumn(
                 "c_bucket",
                 F.when(F.col("page_class") == "ok",
-                       content_bucket_udf(rendered)))
+                       content_bucket_udf(render_spans("spans"))))
 
         # coalesce to COMPUTE width, not state width: that caps the
         # partition count but cannot raise it, so this checkpoint — and
@@ -957,11 +909,8 @@ class RoundRunner:
         if cfg.page_no_duplicate:
             dup_new = (verdict.filter(F.col("dup_first"))
                        .select(F.col("c_bucket").alias("bucket")))
-            dup_seen = st.dup_seen.unionByName(dup_new)
         else:
-            from .state import SEEN_SCHEMA as _SEEN
-            dup_new = spark.createDataFrame([], _SEEN)
-            dup_seen = st.dup_seen
+            dup_new = spark.createDataFrame([], SEEN_SCHEMA)
 
         log_e_pages = verdict.select(F.lit(rnd).alias("round"), "url",
                                      F.col("final_error").alias("error"))
@@ -994,7 +943,6 @@ class RoundRunner:
             from ..pipeline.rowsigs import (
                 curation_finalize_fn, spans_text_expr,
             )
-            from .state import CURATION_SCHEMA
             cur_base = ok_pages.select(
                 F.lit(rnd).alias("round"), "fetch_seq", "doc_id",
                 spans_text_expr("spans").alias("_ctext"))
@@ -1221,9 +1169,7 @@ class RoundRunner:
         n_links_new = _lcnt["total"]
         st.counters["n_priority"] += lstats.get("priority", 0)
         st.counters["n_disk"] += lstats.get("disk", 0)
-        queues = queues.unionByName(new_rows)
         seen_delta = novel.select("bucket")
-        seen = st.seen.unionByName(seen_delta)
 
         # ---- metrics / lineage (O-19) ----
         gate_errors = links.filter(F.col("gate_err").isNotNull()) \
@@ -1241,6 +1187,5 @@ class RoundRunner:
         # forgets from phases B/C are appended by the caller into
         # fetch_log; their taxonomy counts live there.
 
-        return (queues, seen, seen_delta, dup_seen, dup_new,
-                log_e_pages, metrics_e, docs_out_new, curation_new,
-                n_links_new, n_success, new_rows)
+        return (seen_delta, dup_new, log_e_pages, metrics_e, docs_out_new,
+                curation_new, n_links_new, n_success, new_rows)

@@ -3,6 +3,11 @@
 All mutable crawler state lives in DataFrames (SURVEY.md §1.5 "all
 state is tables"); the driver keeps only O(1) counters, which ride in
 the snapshot manifest. One CrawlState = one committed round.
+
+This module alone knows the snapshot's delta-chain format: which
+tables commit as deltas, the pending-delta bookkeeping behind
+CrawlState.append / remove / handoff, the chain-length rule
+(COMPACT_EVERY) and how load composes a chain back into a table.
 """
 
 from __future__ import annotations
@@ -166,12 +171,10 @@ _SCHEMAS = {
 class CrawlState:
     tables: Dict[str, DataFrame]
     counters: Dict[str, int] = field(default_factory=dict)
-    # this state's not-yet-persisted delta rows, relative to the
-    # snapshot the state was loaded from: appended rows per
-    # APPEND_ONLY table, plus `queues_add` (appended frontier rows)
-    # and `queues_rm` (removed qseq tombstones) for the TOMBSTONED
-    # frontier. Consumed by save(), reset by load(). BOTH queues_*
-    # keys must be present for a delta commit (else full write).
+    # the rows not yet persisted, relative to the snapshot this state
+    # was loaded from: per delta-chained table, its appended rows; for
+    # a TOMBSTONED table also `<name>__rm`, its removed qseq values.
+    # Only append/remove add to it and only handoff/save consume it.
     deltas: Dict[str, DataFrame] = field(default_factory=dict)
 
     def __getattr__(self, item):
@@ -194,6 +197,35 @@ class CrawlState:
                         n_disk_wait=0, n_site_fifo=0, n_ip_queue=0)
         return cls(tables, counters)
 
+    def _pend(self, key: str, rows: DataFrame) -> None:
+        self.deltas[key] = (self.deltas[key].unionByName(rows)
+                            if key in self.deltas else rows)
+
+    def append(self, name: str, rows: DataFrame) -> None:
+        """The table becomes table ∪ rows; the rows join its pending
+        delta."""
+        self.tables[name] = self.tables[name].unionByName(rows)
+        self._pend(name, rows)
+
+    def remove(self, name: str, qseqs: DataFrame) -> None:
+        """Drop the rows of a TOMBSTONED table whose qseq is in
+        `qseqs` (one qseq column); the keys join its tombstone delta.
+        qseq is never reused, so the anti-join is exact."""
+        self.tables[name] = self.tables[name].join(qseqs, "qseq",
+                                                   "left_anti")
+        self._pend(f"{name}__rm", qseqs)
+
+    def handoff(self) -> "CrawlState":
+        """A frozen copy that owns the pending deltas, for a save that
+        overlaps the continuing crawl; this state starts an empty
+        delta set. The copy has its own tables and counters dicts and
+        DataFrames are immutable, so the crawl's later appends never
+        reach it."""
+        frozen = CrawlState(dict(self.tables), dict(self.counters),
+                            self.deltas)
+        self.deltas = {}
+        return frozen
+
     # membership tables are bucket-range sharded + sorted (SCALE.md §3:
     # pruned probes, sorted shard merges); the frontier is sharded by
     # (queue, qseq) so the phase-B eligible filter's class + valve
@@ -204,61 +236,40 @@ class CrawlState:
                       "queues__rm": "qseq"}
 
     def save(self, store: SnapshotStore, rnd: int) -> None:
-        # concurrent writes: the tables are independent jobs and tiny
-        # relative to scheduler overhead, so fan out driver-side
-        from concurrent.futures import ThreadPoolExecutor
-        tables_meta: Dict[str, list] = {}
-
-        # delta commits compose against the LAST COMMITTED snapshot —
+        # delta commits extend the LAST COMMITTED snapshot's chains —
         # with snapshot_every > 1 that is rnd - K, not rnd - 1 (the
-        # accumulated deltas span exactly the rounds since it), and
-        # looking up rnd - 1 would silently fall back to full rewrites
-        # of every append-only table at every periodic commit
-        prev_rnd = store.latest()
-
-        def _write(name: str) -> None:
-            range_col = self._RANGE_SHARDED.get(name)
-            if (name in APPEND_ONLY and name in self.deltas
-                    and prev_rnd is not None and prev_rnd < rnd):
-                try:
-                    prev = store.table_rounds(prev_rnd, name)
-                except FileNotFoundError:
-                    prev = None
-                if prev is not None and len(prev) < COMPACT_EVERY:
-                    store.write_delta(rnd, name, self.deltas[name],
-                                      range_col=range_col)
-                    tables_meta[name] = prev + [rnd]
-                    return
-            if (name in TOMBSTONED and f"{name}_add" in self.deltas
-                    and f"{name}_rm" in self.deltas
-                    and prev_rnd is not None and prev_rnd < rnd):
-                # add/remove delta commit: O(delta) appends + O(delta)
-                # removed-key tombstones instead of an O(frontier)
-                # rewrite (see TOMBSTONED above)
-                try:
-                    prev = store.table_rounds(prev_rnd, name)
-                except FileNotFoundError:
-                    prev = None
-                if prev is not None and len(prev) < COMPACT_EVERY:
-                    store.write_delta(rnd, name, self.deltas[f"{name}_add"],
-                                      range_col=range_col)
-                    store.write_delta(
-                        rnd, f"{name}__rm", self.deltas[f"{name}_rm"],
-                        range_col=self._RANGE_SHARDED.get(f"{name}__rm"))
-                    tables_meta[name] = prev + [rnd]
-                    tables_meta[f"{name}__rm"] = store.table_rounds(
-                        prev_rnd, f"{name}__rm", default=[]) + [rnd]
-                    return
-            # mutable table, bootstrap, or compaction due: full write
-            # (for TOMBSTONED this is the compaction: self.tables[name]
-            # already composes appends ∖ tombstones, and resetting
-            # tables_meta drops the chain so prune can expire it)
-            store.write_table(rnd, name, self.tables[name],
-                              range_col=range_col)
-            tables_meta[name] = [rnd]
-
-        with ThreadPoolExecutor(max_workers=len(TABLES)) as ex:
-            list(ex.map(_write, TABLES))
+        # pending deltas span exactly the rounds since it)
+        last = store.latest()
+        prev = _last_chains(store) if last is not None and last < rnd else {}
+        writes: Dict[str, DataFrame] = {}
+        tables_meta: Dict[str, list] = {}
+        for name in TABLES:
+            # a TOMBSTONED table's chain is its append chain plus the
+            # `__rm` tombstone chain: one family, compacted together
+            family = (name, f"{name}__rm") if name in TOMBSTONED else (name,)
+            chain = prev.get(name)
+            if (chain is not None and len(chain) < COMPACT_EVERY
+                    and any(k in self.deltas for k in family)):
+                # O(delta) commit: each pending delta extends its chain
+                for k in family:
+                    tables_meta[k] = list(prev.get(k, []))
+                    if k in self.deltas:
+                        writes[k] = self.deltas[k]
+                        tables_meta[k].append(rnd)
+            else:
+                # mutable table, bootstrap, or compaction due: a full
+                # write starts a fresh chain (self.tables[name] already
+                # composes appends ∖ tombstones, so the `__rm` chain
+                # resets to [] and prune can expire the old files)
+                writes[name] = self.tables[name]
+                tables_meta[name] = [rnd]
+        # the writes are independent jobs and tiny relative to
+        # scheduler overhead, so fan out driver-side
+        from concurrent.futures import ThreadPoolExecutor
+        with ThreadPoolExecutor(max_workers=len(writes)) as ex:
+            list(ex.map(lambda k: store.write_table(
+                rnd, k, writes[k], range_col=self._RANGE_SHARDED.get(k)),
+                writes))
         store.commit(rnd, {"counters": self.counters, "round": rnd,
                            "tables": tables_meta})
         # the deltas are now persisted in THIS snapshot's chain; a
@@ -282,3 +293,24 @@ class CrawlState:
                                        QUEUE_RM_SCHEMA)
                 tables[name] = tables[name].join(rm, "qseq", "left_anti")
         return cls(tables, dict(store.manifest(rnd)["counters"]))
+
+
+def _last_chains(store: SnapshotStore) -> Dict[str, list]:
+    """The table composition chains of the store's latest committed
+    snapshot; {} when there is none to extend."""
+    last = store.latest()
+    if last is None:
+        return {}
+    try:
+        return store.manifest(last).get("tables", {})
+    except FileNotFoundError:
+        return {}
+
+
+def compaction_due(store: SnapshotStore) -> bool:
+    """True when the next save full-rewrites some delta-chained table:
+    its chain reached COMPACT_EVERY, or there is no snapshot to
+    extend."""
+    chains = _last_chains(store)
+    return not chains or any(len(c) >= COMPACT_EVERY
+                             for c in chains.values())

@@ -9,15 +9,15 @@ manifest is written last and a `_LATEST` pointer file is renamed into
 place atomically, so resume (`latest()`) is exact: re-read the tables
 of the newest complete snapshot and continue at `manifest["round"]`.
 
-Grow-only tables (docs_out, fetch_log, ordering, metrics, seen,
-dup_seen) commit as DELTAS: each round writes only its new rows and
-the manifest records the list of ancestor rounds whose files compose
-the full table (`tables: {name: [rounds...]}`) — Iceberg's
-append-commit shape (new data files + manifest reuse). Without this,
-round R would rewrite O(total) rows, O(R^2) cumulative over a crawl.
-Periodic compaction (full rewrite when the chain reaches
-COMPACT_EVERY) bounds read fan-in; prune expires snapshot manifests
-but keeps data dirs still referenced by a kept chain.
+A table may commit as a DELTA: the snapshot's dir holds only the
+rows written since the previous snapshot, and the manifest records
+the list of ancestor rounds whose files compose the full table
+(`tables: {name: [rounds...]}`) — Iceberg's append-commit shape (new
+data files + manifest reuse). The store only writes, reads and
+composes such chains; which tables commit as deltas, and when a
+chain is compacted by a full rewrite, is plans/state.py's business.
+prune expires snapshot manifests but keeps data dirs still
+referenced by a kept chain.
 
 This is the plain-filesystem stand-in for an Iceberg catalog (no
 Iceberg runtime jar is available in this sandbox); the protocol —
@@ -48,7 +48,8 @@ class SnapshotStore:
 
     def write_table(self, rnd: int, name: str, df: DataFrame,
                     parts: int = None, range_col=None) -> None:
-        """Full rewrite of a (mutable) table into this snapshot.
+        """Write `df` as table `name`'s files in this snapshot: a
+        whole table, or one delta of its chain.
 
         range_col: shard the table by range of that column (or list
         of columns) and sort each file by it (docs/SCALE.md §3):
@@ -74,16 +75,6 @@ class SnapshotStore:
         else:
             out = df.coalesce(parts)
         out.write.mode("overwrite").parquet(path)
-
-    def write_delta(self, rnd: int, name: str, delta: DataFrame,
-                    parts: int = None, range_col=None) -> None:
-        """Append commit for a grow-only table: write ONLY this
-        round's delta rows; the snapshot's manifest lists the ancestor
-        rounds whose files compose the full table (Iceberg's
-        new-data-files + manifest-reuse append). Per-round I/O is
-        O(delta) — a full rewrite would make round R cost O(total),
-        i.e. O(R^2) cumulative over a crawl."""
-        self.write_table(rnd, name, delta, parts, range_col)
 
     def table_rounds(self, rnd: int, name: str,
                      default: Optional[list] = None) -> list:

@@ -25,13 +25,12 @@ success set per crawl is unbounded, so no single-partition window.
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from ..functions.exprs import render_spans, site_hash_col
 from ..operators.sequence import assign_global_seq
 
 FILES_PER_DIR = 2000   # types.h:89
@@ -89,7 +88,6 @@ def mirror_layout(docs_out: DataFrame,
     namedSiteListSize the crawl uses); pass the crawl's configured
     value when the slot space is config-widened so the mirror dirs
     and the crawl hash the same slot space."""
-    from ..functions.udfs import site_hash_udf
     d = _hostport_path(docs_out)
     rel = F.concat(F.col("_hostport"), F.col("_path"))
     rel = F.when(rel.endswith("/"), F.concat(rel, F.lit(INDEX_FILE))) \
@@ -99,9 +97,7 @@ def mirror_layout(docs_out: DataFrame,
         site_list_size = NAMED_SITE_LIST_SIZE
     return (d.withColumn(
         "dir", F.format_string(
-            "d%05d", (site_hash_udf("_host",
-                                    F.lit(site_list_size))
-                      % n_dirs).cast("int")))
+            "d%05d", site_hash_col("_host", site_list_size) % n_dirs))
         .withColumn("rel_path", rel)
         .drop("_hostport", "_host", "_path"))
 
@@ -136,23 +132,9 @@ def specific_layout(docs_out: DataFrame, privileged_exts: List[str],
 def render_content_col(docs_out: DataFrame,
                        out_col: str = "content") -> DataFrame:
     """The page-bytes analogue: render the span sequence exactly like
-    the content-dup hash does (kernels/links.render_content), one
-    Arrow pass."""
-    span_t = docs_out.schema["spans"].dataType
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.links import render_content
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                render_content([(s["kind"], s["text"], s["media_ref"],
-                                 s["offset"]) for s in spans])
-                for spans in pdf["spans"]]
-            yield pdf
-
-    schema = T.StructType(list(docs_out.schema.fields)
-                          + [T.StructField(out_col, T.StringType())])
-    return docs_out.mapInPandas(gen, schema)
+    the content-dup hash does (kernels/links.render_content), as a
+    JVM expression."""
+    return docs_out.withColumn(out_col, render_spans("spans"))
 
 
 def write_docs_out(docs_out: DataFrame, outdir: str, mode: str = "save",

@@ -111,6 +111,29 @@ def test_render_content_matches_dup_hash_input(spark):
     got = render_content_col(d).collect()[0]["content"]
     assert got == render_content([("text", "body 0", None, 0)])
 
+    # several spans out of offset order, offset ties (the sort is
+    # stable: ties keep their array order), a media span (its
+    # media_ref, not its text) and a NULL text (renders as '')
+    cases = [
+        [("text", "c", None, 30), ("anchor", "a", None, 10),
+         ("text", "b", None, 20)],
+        [("text", "x", None, 5), ("text", "y", None, 5),
+         ("anchor", "z", None, 1), ("text", "w", None, 5)],
+        [("text", "t", "ignored", 0), ("media", "alt", "img.png", 1),
+         ("media", None, None, 2)],
+        [("text", None, None, 0), ("text", "after", None, 1)],
+    ]
+    rows = [(0, i, f"http://h.com/{i}",
+             [{"kind": k, "text": t, "media_ref": m, "offset": o}
+              for k, t, m, o in spans])
+            for i, spans in enumerate(cases)]
+    d = spark.createDataFrame(
+        rows, "round int, fetch_seq long, doc_id string, spans "
+        "array<struct<kind:string,text:string,media_ref:string,offset:int>>")
+    got = {r["fetch_seq"]: r["content"]
+           for r in render_content_col(d).collect()}
+    assert got == {i: render_content(spans) for i, spans in enumerate(cases)}
+
 
 def test_save_layout_url_tags_index(spark):
     """URL_TAGS index record: "%4u (%u) " + url

@@ -2,6 +2,10 @@
 snapshot store, final results identical to an uninterrupted run."""
 
 import os
+import signal
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
@@ -10,6 +14,7 @@ from larbin_spark.plans.crawl import collect_results, run_crawl
 from larbin_spark.sources.catalog import SnapshotStore
 
 ROUNDS = int(os.environ.get("SPARK_GRAFT_RESUME_ROUNDS", "6"))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -112,8 +117,8 @@ def test_write_behind_commit_matches_oracle_across_compaction_and_prune(
     happens, never what the crawl computes or what resume sees: the
     crawl matches the oracle exactly. Stress the bookkeeping the
     overlap relies on: tiny COMPACT_EVERY forces multiple mid-crawl
-    compactions (synchronous boundaries reading plans based on the
-    last reload's files), tiny RELOAD_ROUNDS exercises the periodic
+    compactions (rebase boundaries whose save reads plans based on
+    the last reload's files), tiny RELOAD_ROUNDS exercises the periodic
     parquet rebase, keep_snapshots=2 lets prune expire data dirs while
     the in-memory lazy plans are still alive, and collect_results at
     the end reads every table through the exit rebase."""
@@ -122,7 +127,6 @@ def test_write_behind_commit_matches_oracle_across_compaction_and_prune(
     from larbin_spark.plans import crawl as crawlmod
     from larbin_spark.plans import state as statemod
     monkeypatch.setattr(crawlmod, "RELOAD_ROUNDS", 5)
-    monkeypatch.setattr(crawlmod, "COMPACT_EVERY", 4)
     monkeypatch.setattr(statemod, "COMPACT_EVERY", 4)
 
     docs, hosts, robots, _ = to_oracle_inputs(fixture_web)
@@ -144,3 +148,71 @@ def test_write_behind_commit_matches_oracle_across_compaction_and_prune(
     from larbin_spark.plans.state import CrawlState
     st2 = CrawlState.load(spark, store, 9)
     assert st2.counters["round"] == 9
+
+
+def test_resume_after_kill_mid_commit(spark, dims, seeds, fixture_dir,
+                                      fixture_web, tmp_path):
+    """A crawl killed while a write-behind save is half written resumes
+    to the oracle's digests. The child crawls into a store and
+    SIGKILLs itself right after one table's write of round 3's save,
+    while the next round computes on its main thread: round 3 never
+    commits, so resume starts from round 2 and redoes round 3's save
+    over the torn data dir."""
+    from larbin_spark.fixtures.webgen import to_oracle_inputs
+    from larbin_spark.oracle.simulator import CrawlOracle
+
+    rounds = 6  # the child dies in round 3's save
+    root = str(tmp_path / "snaps")
+    script = textwrap.dedent(f"""
+        import os, signal, sys
+        sys.path.insert(0, {REPO!r})
+        from pyspark.sql import SparkSession
+        spark = (SparkSession.builder.master("local[2]")
+                 .appName("kill-mid-commit")
+                 .config("spark.sql.shuffle.partitions", "4")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        spark.sparkContext.setLogLevel("OFF")
+        from larbin_spark.config import CrawlConfig
+        from larbin_spark.plans.crawl import run_crawl
+        from larbin_spark.sources.catalog import SnapshotStore
+
+        write_table = SnapshotStore.write_table
+
+        def write_then_die(self, rnd, name, df, *args, **kwargs):
+            write_table(self, rnd, name, df, *args, **kwargs)
+            if rnd == 3 and name == "seen":
+                os.kill(os.getpid(), signal.SIGKILL)
+
+        SnapshotStore.write_table = write_then_die
+        dims = {{n: spark.read.parquet(os.path.join({fixture_dir!r},
+                                                    n + ".parquet"))
+                 for n in ("documents", "hosts", "robots")}}
+        run_crawl(spark, CrawlConfig(), dims, {list(seeds)!r},
+                  max_rounds={rounds}, store=SnapshotStore({root!r}))
+        print("NOT_KILLED")
+    """)
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, env.get("PYTHONPATH")) if p)
+    out = subprocess.run([sys.executable, "-c", script], cwd=REPO, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == -signal.SIGKILL, (out.returncode,
+                                               out.stderr[-4000:])
+
+    store = SnapshotStore(root)
+    assert store.latest() < 3
+    assert not os.path.exists(
+        os.path.join(store._snap_dir(3), "manifest.json"))
+
+    docs, hosts, robots, _ = to_oracle_inputs(fixture_web)
+    want = CrawlOracle(CrawlConfig(), docs, hosts, robots).run(
+        list(seeds), max_rounds=rounds)
+    got = collect_results(run_crawl(spark, CrawlConfig(), dims, list(seeds),
+                                    max_rounds=rounds, store=store,
+                                    resume=True))
+    assert got["rounds"] == want["rounds"] == rounds
+    assert got["ordering"] == want["ordering"]
+    assert sorted(got["seen"]) == sorted(want["seen"])
+    assert got["errors"] == want["errors"]
+    assert sorted(got["fetch_log"]) == sorted(want["fetch_log"])
+    assert got["emitted"] == want["emitted"]

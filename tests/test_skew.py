@@ -5,8 +5,7 @@ import numpy as np
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from larbin_spark.operators.skew import (salted_collect_sample,
-                                         salted_per_key_topk)
+from larbin_spark.operators.skew import salted_per_key_topk
 
 
 def _zipf_df(spark, n=20000, n_keys=200, seed=7):
@@ -37,13 +36,3 @@ def test_salted_topk_small_k(spark):
     for r in df.collect():
         per_key[r["key"]] = min(per_key.get(r["key"], 1 << 60), r["seq"])
     assert {(r["key"], r["seq"]) for r in rows} == set(per_key.items())
-
-
-def test_salted_collect_sample_bounded(spark):
-    df = _zipf_df(spark, n=8000, n_keys=5)
-    out = {r["key"]: r for r in
-           salted_collect_sample(df, ["key"], "seq", 10, n_salts=4)
-           .collect()}
-    for k, r in out.items():
-        assert r["n_sampled"] <= 10
-        assert list(r["sample"]) == sorted(r["sample"])

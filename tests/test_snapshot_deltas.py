@@ -84,10 +84,8 @@ def test_compaction_bounds_chain(spark, tmp_path):
     rows = 0
     for rnd in range(1, COMPACT_EVERY + 3):
         st = CrawlState.load(spark, store, rnd - 1)
-        delta = spark.createDataFrame([(rnd, f"http://x/{rnd}", "success")],
-                                      _SCHEMAS["fetch_log"])
-        st.tables["fetch_log"] = st.tables["fetch_log"].unionByName(delta)
-        st.deltas["fetch_log"] = delta
+        st.append("fetch_log", spark.createDataFrame(
+            [(rnd, f"http://x/{rnd}", "success")], _SCHEMAS["fetch_log"]))
         rows += 1
         st.save(store, rnd)
         chain = store.table_rounds(rnd, "fetch_log")
@@ -107,10 +105,8 @@ def test_prune_aborts_on_unreadable_kept_manifest(spark, tmp_path):
     store = SnapshotStore(str(tmp_path / "snaps"))
     st = CrawlState.empty(spark)
     for rnd in range(4):
-        st.deltas["fetch_log"] = spark.createDataFrame(
-            [(rnd, f"http://x/{rnd}", "success")], _SCHEMAS["fetch_log"])
-        st.tables["fetch_log"] = st.tables["fetch_log"].unionByName(
-            st.deltas["fetch_log"])
+        st.append("fetch_log", spark.createDataFrame(
+            [(rnd, f"http://x/{rnd}", "success")], _SCHEMAS["fetch_log"]))
         st.save(store, rnd)
     # corrupt the latest (kept) snapshot's manifest
     with open(os.path.join(store._snap_dir(3), "manifest.json"), "w") as fp:
