@@ -63,9 +63,10 @@ class CrawlConfig:
     # setting, default). The reference itself persists periodically,
     # not per-event (the seen hashtable is saved on a timer,
     # src/fetch/checker.cxx + global.cxx saveInterval; the disk fifos
-    # sync in batches), so K>1 mirrors it while cutting ~7 parquet
-    # write jobs from the per-round fixed cadence; resume lands on
-    # the last committed boundary exactly. In-memory state between
+    # sync in batches), so K>1 mirrors it while skipping the
+    # snapshot save (a parquet write job or more per written table)
+    # in K-1 of every K rounds; resume lands on the last committed
+    # boundary exactly. In-memory state between
     # commits stays localCheckpoint-truncated (plans/round.py:_lc),
     # so only the append-only tables carry K unions of lineage.
     snapshot_every: int = 1
@@ -73,11 +74,11 @@ class CrawlConfig:
     # inline curation (pipeline/rowsigs): when True, phase F records a
     # per-page signature row (token count, quality, predicted
     # language, simhash, fingerprint) for every successful fetch into
-    # the grow-only `curation` table. The signatures are per-row
-    # column expressions fused into the projection over the round's
-    # already-materialized pages — zero extra scans or shuffles per
-    # round, vs re-reading the fetched corpus for each signature
-    # after the crawl (the standalone pipeline/dedup/textstats
+    # the grow-only `curation` table. The signatures come from one
+    # vectorized Arrow pass (rowsigs.curation_finalize_fn) over the
+    # round's already-materialized pages — zero extra scans or
+    # shuffles per round, vs re-reading the fetched corpus for each
+    # signature after the crawl (the standalone pipeline/dedup/textstats
     # operators). Off by default: the reference crawler has no such
     # stage; this extends it toward the training-data pipeline.
     curate: bool = False

@@ -93,8 +93,8 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig,
     commit — waits for its save and reloads the state from it, which
     rebases the state plans on parquet and resets Catalyst size
     statistics (plans/round.py phase F). Between rebases the bounded
-    hot tables (ip_queue, buckets) live on the localCheckpoints
-    run_round takes, overlapped with its phase E, and the unbounded
+    hot tables (site_fifo, ip_queue, slots) live on the
+    localCheckpoints run_round takes, and the unbounded
     ones (queues, seen, dup_seen) stay lazy compositions over the
     last reload's parquet plus the rounds' already-checkpointed
     deltas: materializing those would be O(state) per round,

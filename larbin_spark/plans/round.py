@@ -7,11 +7,15 @@ Phase map (the oracle simulator is the executable spec):
                     slot state and hosts/robots dims broadcast-joined
                     on: routing (sequencer.cxx, site.cxx:136-207),
                     then each queued slot's head resolve, robots
-                    parse and fifo scan (site.cxx:212-496); the
-                    dns_per_round cap is applied after its checkpoint
+                    parse and fifo scan (site.cxx:212-496); one
+                    running-count window over its checkpoint numbers
+                    the bounces, transfers and queued slots, and the
+                    dns_per_round cap is a filter on that numbering
   D politeness   -> window row_number per ip_hash bucket
-                    (site.cxx:572-644), then fetch_seq by the
-                    two-phase rank; a fetch cap filters that rank
+                    (site.cxx:572-644), checkpointed; its first k
+                    rows per bucket get fetch_seq by the two-phase
+                    rank and the rest stay queued; a fetch cap keeps
+                    the first buckets by head
   E fetch+parse  -> broadcast join against documents, then ONE slim
                     page-verdict checkpoint per round (no document ->
                     err40X, content dup) that every consumer reads +
@@ -23,9 +27,10 @@ Phase map (the oracle simulator is the executable spec):
 Determinism: every sequence number is a rank over an explicit total
 order (qseq / take_rank / fifo_pos / transfer_seq /
 (fetch_seq, link_idx)); nothing depends on partitioning. The global
-row_number windows run ONLY on budget-limited sets (<= sequencer
-budget / <= #ip buckets), so those single-partition windows are
-bounded, not a scalability hole. The unbounded sequences — fetch_seq
+windows run ONLY on budget-limited sets (the take, <= the sequencer
+budget; the per-slot pass output, <= the take plus the in-RAM site
+fifos), so those single-partition windows are bounded, not a
+scalability hole. The unbounded sequences — fetch_seq
 over the #ip-buckets × k fetch set, and qseq for per-round new links
 under the (fetch_seq, link_idx) order — use the two-phase distributed
 rank (operators/sequence.py).
@@ -63,8 +68,9 @@ from .state import (
 #   fifo  one per post-B site-fifo row: its phase-C action, computed
 #         as if the slot were selected (fifo_pos, dns_queue_pos)
 #   slot  one per touched slot: its post-B state (s_*, dns_queue_pos)
+#         and whether it is queued for DNS after B
 #   head  one per queued slot: its post-C state, as if selected, and
-#         whether it re-queues for DNS
+#         whether it is still queued for DNS after C
 # ip_hash is the bucket a transfer goes to; s_* mirror SLOTS_SCHEMA.
 _SLOT_STATE = [f for f in SLOTS_SCHEMA
                if f.name not in ("slot_id", "dns_queue_pos")]
@@ -76,7 +82,7 @@ SLOT_PASS_SCHEMA = T.StructType(
         T.StructField("err", T.StringType()),
         T.StructField("ip_hash", T.IntegerType()),
         T.StructField("dns_queue_pos", T.LongType()),
-        T.StructField("requeue", T.BooleanType()),
+        T.StructField("queued", T.BooleanType()),
     ] + [T.StructField("s_" + f.name, f.dataType) for f in _SLOT_STATE])
 
 # SCALE note (r5): no l_url column — the canonical URL string is a
@@ -408,25 +414,45 @@ class RoundRunner:
         take = _lc(self._cap("B_take", take))
         bc, counts = self._slot_steps(st, take, rnd)
 
-        # the sequence numbers are ranks over the checkpoint, under the
-        # orders the oracle assigns them in
-        took = bc.filter(F.col("kind") == "take")
-        wt = Window.orderBy("take_rank")
-        bounced = (took.filter(F.col("action") == slot_logic.A_BOUNCE)
+        # ---------- B/C sequence numbers ----------
+        # One running count over the pass checkpoint, in the oracle's
+        # order: takes by take_rank, then each queued slot in DNS-queue
+        # order (head row, slot row, fifo rows by fifo_pos; unqueued
+        # slot rows sort last). It counts bounces (their qseq),
+        # transfers (B's, then C's transfer_seq) and heads (proc_rank),
+        # and every B/C output below is a filter of its checkpoint.
+        # The set is budget-bounded, and so is its single-partition window.
+        kind, act = F.col("kind"), F.col("action")
+        wseq = (Window.orderBy(F.col("take_rank").asc_nulls_last(),
+                               F.col("dns_queue_pos").asc_nulls_last(),
+                               "slot_id",
+                               F.col("fifo_pos").asc_nulls_first(), "kind")
+                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+        def running(cond):
+            return F.count(F.when(cond, 1)).over(wseq)
+
+        bounce = (kind == "take") & (act == slot_logic.A_BOUNCE)
+        seq = _lc(self._cap("BC_seq", bc.withColumns({
+            "qseq": F.when(bounce, running(bounce) - 1
+                           + F.lit(C["qseq_next"])).otherwise(F.col("qseq")),
+            "transfer_seq": running(act == slot_logic.A_TRANSFER) - 1
+            + F.lit(C["transfer_seq_next"]),
+            "proc_rank": running(kind == "head")})))
+        # the rows the round acts on: the takes (proc_rank 0) and the
+        # queued slots', or under a dns_per_round cap the first slots'
+        done = (F.col("proc_rank") <= cfg.dns_per_round
+                if cfg.dns_per_round else F.lit(True))
+        bounced = (seq.filter(bounce)
                    .withColumn("queue",
                                F.when(F.col("cls").startswith("priority"),
                                       "priority_wait").otherwise("disk_wait"))
-                   .withColumn("qseq", F.row_number().over(wt) - 1
-                               + F.lit(C["qseq_next"]))
                    .select(*QUEUE_SCHEMA.names))
-        transfers_b = (took.filter(F.col("action") == slot_logic.A_TRANSFER)
-                       .withColumn("transfer_seq",
-                                   F.row_number().over(wt) - 1
-                                   + F.lit(C["transfer_seq_next"]))
-                       .select(*IP_QUEUE_SCHEMA.names))
-        log_b = (took.filter(F.col("action") == slot_logic.A_FORGET)
-                 .select(F.lit(rnd).alias("round"), "url",
-                         F.col("err").alias("error")))
+        transfers = (seq.filter(done & (act == slot_logic.A_TRANSFER))
+                     .select(*IP_QUEUE_SCHEMA.names))
+        log_bc = (seq.filter(done & (act == slot_logic.A_FORGET))
+                  .select(F.lit(rnd).alias("round"), "url",
+                          F.col("err").alias("error")))
 
         # phase-B counter moves, from the counts that rode the pass
         # (the literals above read the pre-move counters). No
@@ -434,8 +460,8 @@ class RoundRunner:
         # (anti-join above), so `qseq < watermark` keeps selecting
         # exactly the not-yet-taken valve-open set
         n_bounce = n_transfer_b = n_fifo_b = 0
-        for (kind, c, a), n in counts.items():
-            if kind != "take":
+        for (k, c, a), n in counts.items():
+            if k != "take":
                 continue
             C["take_next"] += n
             C[f"n_{c}"] -= n
@@ -454,46 +480,25 @@ class RoundRunner:
         # ---------- phase C: DNS + robots ----------
         # The pass resolved every queued slot as if it were selected:
         # exact, because that step reads only its own slot and the
-        # dims. The dns_per_round cap keeps the first slots in DNS-queue
-        # order (proc_rank, one bounded window over the queued slots);
-        # the others keep their post-B fifo and state.
-        heads = bc.filter(F.col("kind") == "head").withColumn(
-            "proc_rank", F.row_number().over(Window.orderBy("dns_queue_pos")))
-        fifo = bc.filter(F.col("kind") == "fifo")
+        # dims.
         if cfg.dns_per_round:
-            heads = heads.filter(F.col("proc_rank") <= cfg.dns_per_round)
-            fifo = fifo.join(F.broadcast(heads.select(
-                "slot_id", F.lit(True).alias("picked"))), "slot_id", "left")
-            picked = F.coalesce(F.col("picked"), F.lit(False))
             # the as-if-selected counts include dropped slots: the
             # capped path pays one count
             cstats = {r["action"]: r["count"] for r in
-                      fifo.filter(picked).groupBy("action").count().collect()}
+                      seq.filter((kind == "fifo") & done)
+                      .groupBy("action").count().collect()}
         else:
-            picked = F.lit(True)
-            cstats = {a: n for (kind, _c, a), n in counts.items()
-                      if kind == "fifo"}
+            cstats = {a: n for (k, _c, a), n in counts.items()
+                      if k == "fifo"}
         n_transfer_c = cstats.get(slot_logic.A_TRANSFER, 0)
         n_forget_c = cstats.get(slot_logic.A_FORGET, 0)
-
-        # transfers rank after phase B's, by DNS-queue then fifo order
-        wtr = Window.orderBy("dns_queue_pos", "fifo_pos")
-        transfers_c = (fifo.filter(picked & (F.col("action")
-                                             == slot_logic.A_TRANSFER))
-                       .withColumn("transfer_seq",
-                                   F.row_number().over(wtr) - 1
-                                   + F.lit(C["transfer_seq_next"]))
-                       .select(*IP_QUEUE_SCHEMA.names))
-        log_c = (fifo.filter(picked & (F.col("action") == slot_logic.A_FORGET))
-                 .select(F.lit(rnd).alias("round"), "url",
-                         F.col("err").alias("error")))
         C["transfer_seq_next"] += n_transfer_c
         C["n_site_fifo"] -= n_transfer_c + n_forget_c
         C["n_ip_queue"] += n_transfer_c
         # every fifo row went through the pass: the new fifo is the
         # unselected slots' rows plus the selected slots' stays
-        site_fifo = (fifo.filter(~picked | (F.col("action")
-                                            == slot_logic.A_STAY))
+        site_fifo = (seq.filter((kind == "fifo")
+                                & (~done | (act == slot_logic.A_STAY)))
                      .select(*SITE_FIFO_SCHEMA.names))
 
         # slot states: a selected slot takes its post-C state and
@@ -502,45 +507,56 @@ class RoundRunner:
         state_cols = [F.col("s_" + f.name).alias(f.name) for f in _SLOT_STATE]
         requeue_pos = (F.lit(rnd * 2 + 1).cast("long") * F.lit(1 << 32)
                        + F.col("proc_rank"))
-        touched = bc.filter(F.col("kind") == "slot")
-        new_states = (touched.join(F.broadcast(heads.select("slot_id")),
-                                   "slot_id", "left_anti")
-                      .select("slot_id", "dns_queue_pos", *state_cols)
-                      .unionByName(heads.select(
-                          "slot_id", F.when(F.col("requeue"), requeue_pos)
-                          .alias("dns_queue_pos"), *state_cols)))
-        slots = (st.slots.join(F.broadcast(touched.select("slot_id")),
+        head, queued = kind == "head", F.col("queued")
+        new_states = (seq.filter((head & done) | ((kind == "slot")
+                                                  & ~(queued & done)))
+                      .select("slot_id",
+                              F.when(~head, F.col("dns_queue_pos"))
+                              .when(queued, requeue_pos)
+                              .alias("dns_queue_pos"), *state_cols))
+        slots = (st.slots.join(F.broadcast(seq.filter(kind == "slot")
+                                           .select("slot_id")),
                                "slot_id", "left_anti")
                  .unionByName(new_states))
 
         # Background checkpoints run on this one pool, overlapped with
         # the serial phases: slots from phase C until phase E needs
-        # the fast-fail slots, ip_queue and buckets from
-        # phase D through phase E, and phase E's n_success count and
-        # curation finalize. Three workers is the peak overlap (phase
+        # the fast-fail slots, then phase E's n_success count and
+        # curation finalize. Two workers is the peak overlap (phase
         # E). On any failure, pending work is cancelled and running
         # jobs are detached, so no checkpoint job keeps the interpreter
         # alive on a non-daemon thread.
-        ex = ThreadPoolExecutor(max_workers=3)
+        ex = ThreadPoolExecutor(max_workers=2)
         try:
-            # slots is a lazy plan over the pass checkpoint and
+            # slots is a lazy plan over the numbering checkpoint and
             # st.slots, not read before phase E. site_fifo stays a
-            # filter over the pass checkpoint: only the save and the
-            # next round's pass read it
+            # filter over that checkpoint: only the save and the next
+            # round's pass read it
             f_slots = ex.submit(_lc, slots)
-            ip_queue = (st.ip_queue.unionByName(transfers_b)
-                        .unionByName(transfers_c))
 
             # ---------- phase D: politeness schedule ----------
+            # Larbin's per-IPSite clock (site.cxx:572-644) is the round
+            # itself: every ip bucket with queued URLs fetches its
+            # first k of them this round. The bucket-windowed queue is
+            # checkpointed once; the fetch set and the post-D queue
+            # are its two halves.
             k = max(1, cfg.fetch_per_ip_per_round)
-            wip = Window.partitionBy("ip_hash").orderBy("transfer_seq")
-            cand = (ip_queue.join(F.broadcast(st.buckets), "ip_hash", "left")
-                    .filter(F.col("last_fetch_round").isNull()
-                            | (F.col("last_fetch_round") < rnd)))
-            cand = (cand.withColumn("rn", F.row_number().over(wip))
-                    .withColumn("bucket_head", F.min("transfer_seq").over(
-                        Window.partitionBy("ip_hash"))))
-            fetched = self._cap("D_sched", cand.filter(F.col("rn") <= k))
+            wip = Window.partitionBy("ip_hash")
+            cand = _lc(self._cap("D_sched", st.ip_queue.unionByName(
+                transfers).withColumns({
+                    "rn": F.row_number().over(wip.orderBy("transfer_seq")),
+                    "bucket_head": F.min("transfer_seq").over(wip)})))
+            due = F.col("rn") <= k
+            if cfg.fetch_cap_per_round:
+                # the cap counts buckets: the first `cap` by bucket head
+                # (a TakeOrdered over one row per bucket) fetch, the
+                # others wait whole
+                first = (cand.filter(F.col("rn") == 1)
+                         .orderBy("bucket_head")
+                         .limit(cfg.fetch_cap_per_round)
+                         .select("ip_hash", F.lit(True).alias("capped_in")))
+                cand = cand.join(F.broadcast(first), "ip_hash", "left")
+                due = due & F.col("capped_in").isNotNull()
             # (bucket_head, rn) is a unique total order over the fetch
             # set (bucket_head = min transfer_seq of the ip bucket,
             # unique per bucket; rn unique within). The set is
@@ -548,40 +564,19 @@ class RoundRunner:
             # scale (SCALE.md §1), so it is ranked with the two-phase
             # distributed scheme, not a single-partition window
             # (VERDICT r2 minor); its count rides the rank's internal
-            # counts job. A per-round fetch cap keeps the first `cap`
-            # ranks: a filter on the same rank, with no count of its own.
+            # counts job.
             from ..operators.sequence import assign_global_seq
             _dcnt: dict = {}
             fetched = assign_global_seq(
-                fetched, ["bucket_head", "rn"], "fetch_seq",
+                cand.filter(due), ["bucket_head", "rn"], "fetch_seq",
                 C["fetch_seq_next"], counts_out=_dcnt)
             n_fetched = _dcnt["total"]
-            if cfg.fetch_cap_per_round:
-                fetched = fetched.filter(
-                    F.col("fetch_seq")
-                    < C["fetch_seq_next"] + cfg.fetch_cap_per_round)
-                n_fetched = min(n_fetched, cfg.fetch_cap_per_round)
             fetched = _lc(self._cap("D_fetched", fetched.select(
                 "url", "host", "port", "path", "depth", "cookie", "tag",
                 "slot_id", "ip_hash", "transfer_seq", "fetch_seq")))
             C["fetch_seq_next"] += n_fetched
             C["n_ip_queue"] -= n_fetched
-
-            ip_queue = ip_queue.join(fetched.select("transfer_seq"),
-                                     "transfer_seq", "left_anti")
-            fetched_buckets = (fetched.select("ip_hash").distinct()
-                               .withColumn("last_fetch_round", F.lit(rnd)))
-            buckets = (st.buckets.join(fetched_buckets.select("ip_hash"),
-                                       "ip_hash", "left_anti")
-                       .unionByName(fetched_buckets))
-            # ip_queue and buckets are final here and phase E reads
-            # neither: checkpoint the two bounded tables in the
-            # background, so the commit and the snapshot save (which
-            # writes these checkpoints) never evaluate their lazy
-            # plans. slots stays lazy: checkpointing it gained nothing
-            # measurable and would cost O(slots) per round at the
-            # config-widened slot space (SCALE.md §1).
-            f_bounded = ex.submit(lambda: (_lc(ip_queue), _lc(buckets)))
+            ip_queue = cand.filter(~due).select(*IP_QUEUE_SCHEMA.names)
 
             # link-time fast-fail (initOK) consults slot state as of
             # end of phase C (docs/ROUND_MODEL.md)
@@ -602,7 +597,6 @@ class RoundRunner:
              curation_new, n_links_new, n_success,
              links_enqueued) = self._phase_e(
                 st, fetched, ff_slots, rnd, C["qseq_next"] + n_bounce, ex)
-            ip_queue, buckets = f_bounded.result()
         except BaseException:
             ex.shutdown(wait=False, cancel_futures=True)
             raise
@@ -622,7 +616,7 @@ class RoundRunner:
         # snapshot commits as O(delta) chains (plans/state.py); the
         # bounded mutable tables are replaced whole.
         st.tables.update(site_fifo=site_fifo, ip_queue=ip_queue,
-                         slots=slots, buckets=buckets)
+                         slots=slots)
         # the frontier loses every routed take and gains the bounces
         # and the newly discovered links
         st.remove("queues", take.select("qseq"))
@@ -630,16 +624,15 @@ class RoundRunner:
         st.append("queues", links_enqueued)
         st.append("seen", seen_delta)
         st.append("dup_seen", dup_delta)
-        st.append("fetch_log", log_b.unionByName(log_c).unionByName(log_e))
+        st.append("fetch_log", log_bc.unionByName(log_e))
         st.append("ordering", ordering_new)
         st.append("metrics", metrics_e)
         st.append("docs_out", docs_out_new)
         if cfg.curate:
             # inline curation (pipeline/rowsigs): the signatures were
             # materialized by phase E's compute-width finalize pass, so
-            # this append (and the snapshot writer's small-delta
-            # coalesce) moves only precomputed values — no extra
-            # scan, no shuffle, nothing left for the save to narrow
+            # this append (and the snapshot write) moves only
+            # precomputed values — no extra scan, no shuffle
             st.append("curation", curation_new)
         C["round"] = rnd + 1
         return st
@@ -740,7 +733,8 @@ class RoundRunner:
                 state = {"s_" + k: v for k, v in slot.items()
                          if k not in ("nburls", "dns_queue_pos")}
                 emit("slot", None, slot_id=int(span[0]["slot_id"]),
-                     dns_queue_pos=qpos, s_nburls=nb, **state)
+                     dns_queue_pos=qpos, queued=bool(fifo), s_nburls=nb,
+                     **state)
                 if not fifo:
                     continue
                 # phase C: newId from the fifo head, its DNS answer and
@@ -757,7 +751,7 @@ class RoundRunner:
                 n_forget = sum(a == slot_logic.A_FORGET for a, _ in acts)
                 emit("head", None, slot_id=int(head["slot_id"]),
                      dns_queue_pos=qpos,
-                     requeue=any(a == slot_logic.A_STAY for a, _ in acts),
+                     queued=any(a == slot_logic.A_STAY for a, _ in acts),
                      s_name=head["puny"], s_port=int(head["port"]),
                      s_dns_state=outcome, s_forbidden=forbidden,
                      s_nburls=nb - n_forget, s_dns_expire_round=expire,
@@ -936,10 +930,8 @@ class RoundRunner:
             # all six signatures come from ONE vectorized Arrow pass
             # over a render of the success rows (kernels/vectorized
             # simhash60_batch + curation_sigs_batch, bit-equal to
-            # the rowsigs expression forms). Materialized EAGERLY at
-            # compute width: curation_new feeds the snapshot save,
-            # whose small-delta coalesce would otherwise narrow this
-            # mapInPandas to 4 workers regardless of cluster size.
+            # the rowsigs expression forms), materialized eagerly at
+            # compute width.
             from ..pipeline.rowsigs import (
                 curation_finalize_fn, spans_text_expr,
             )

@@ -70,11 +70,6 @@ SLOTS_SCHEMA = T.StructType([
     T.StructField("ip_hash", T.IntegerType()),
 ])
 
-BUCKETS_SCHEMA = T.StructType([
-    T.StructField("ip_hash", T.IntegerType()),
-    T.StructField("last_fetch_round", T.IntegerType()),
-])
-
 SEEN_SCHEMA = T.StructType([T.StructField("bucket", T.LongType())])
 
 FETCH_LOG_SCHEMA = T.StructType([
@@ -125,9 +120,9 @@ CURATION_SCHEMA = T.StructType([
     T.StructField("fingerprint", T.StringType()),
 ])
 
-TABLES = ("queues", "site_fifo", "ip_queue", "slots", "buckets",
-          "seen", "dup_seen", "fetch_log", "ordering", "metrics",
-          "docs_out", "curation")
+TABLES = ("queues", "site_fifo", "ip_queue", "slots", "seen",
+          "dup_seen", "fetch_log", "ordering", "metrics", "docs_out",
+          "curation")
 
 # grow-only tables: per-round snapshots append ONLY the round's delta
 # files (Iceberg-style), never rewrite history — a full rewrite of
@@ -148,8 +143,8 @@ APPEND_ONLY = ("seen", "dup_seen", "fetch_log", "ordering", "metrics",
 # which makes the tombstone anti-join exact even when a row appended
 # in one delta is removed by a later one. Compaction at COMPACT_EVERY
 # bounds the chain exactly like the grow-only tables. The remaining
-# mutable tables (slots/site_fifo/ip_queue/buckets) ARE bounded by
-# the in-flight budget / slot-space size and stay full rewrites.
+# mutable tables (slots/site_fifo/ip_queue) ARE bounded by the
+# in-flight budget / slot-space size and stay full rewrites.
 TOMBSTONED = ("queues",)
 QUEUE_RM_SCHEMA = T.StructType([T.StructField("qseq", T.LongType())])
 # compact (full rewrite) when a table's file-composition list reaches
@@ -159,8 +154,8 @@ COMPACT_EVERY = 16
 _SCHEMAS = {
     "queues": QUEUE_SCHEMA, "site_fifo": SITE_FIFO_SCHEMA,
     "ip_queue": IP_QUEUE_SCHEMA, "slots": SLOTS_SCHEMA,
-    "buckets": BUCKETS_SCHEMA, "seen": SEEN_SCHEMA,
-    "dup_seen": SEEN_SCHEMA, "fetch_log": FETCH_LOG_SCHEMA,
+    "seen": SEEN_SCHEMA, "dup_seen": SEEN_SCHEMA,
+    "fetch_log": FETCH_LOG_SCHEMA,
     "ordering": ORDERING_SCHEMA, "metrics": METRICS_SCHEMA,
     "docs_out": DOCS_OUT_SCHEMA,
     "curation": CURATION_SCHEMA,
@@ -230,7 +225,7 @@ class CrawlState:
     # pruned probes, sorted shard merges); the frontier is sharded by
     # (queue, qseq) so the phase-B eligible filter's class + valve
     # watermark predicates prune to each class's head shards on
-    # parquet min/max stats; everything else coalesces
+    # parquet min/max stats; everything else is written as it arrives
     _RANGE_SHARDED = {"seen": "bucket", "dup_seen": "bucket",
                       "queues": ["queue", "qseq"],
                       "queues__rm": "qseq"}

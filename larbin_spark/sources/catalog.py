@@ -47,9 +47,14 @@ class SnapshotStore:
         return os.path.join(self.root, f"round={rnd:06d}")
 
     def write_table(self, rnd: int, name: str, df: DataFrame,
-                    parts: int = None, range_col=None) -> None:
+                    range_col=None) -> None:
         """Write `df` as table `name`'s files in this snapshot: a
-        whole table, or one delta of its chain.
+        whole table, or one delta of its chain. The data sizes the
+        files: a range-sharded table gets one file per range
+        partition, whose count AQE sets from the rows (a small delta
+        is one file), and any other table one file per partition it
+        arrives with. The manifest `commit` writes is the commit
+        marker, so no `_SUCCESS` file is written.
 
         range_col: shard the table by range of that column (or list
         of columns) and sort each file by it (docs/SCALE.md §3):
@@ -57,24 +62,16 @@ class SnapshotStore:
         membership probes and the frontier's head/watermark filters
         prune to the relevant shards and shard merges are sorted
         merges. This is the seam Iceberg `bucket(col, N)` /
-        sort-order partitioning fills on a real cluster; `parts`
-        defaults to the cluster's core count (floor 4) so the
-        encode+write work of a commit spreads over every executor —
-        a fixed constant capped the save at 4 concurrent tasks no
-        matter the cluster size (r5 span attribution flagged it); at
-        the 10^10 operating point it is sized per table (thousands
-        for the seen set and frontier)."""
-        if parts is None:
-            parts = max(4, df.sparkSession.sparkContext.defaultParallelism)
+        sort-order partitioning fills on a real cluster."""
         path = os.path.join(self._snap_dir(rnd), name)
         if range_col is not None:
             cols = ([range_col] if isinstance(range_col, str)
                     else list(range_col))
-            out = (df.repartitionByRange(parts, *cols)
-                   .sortWithinPartitions(*cols))
-        else:
-            out = df.coalesce(parts)
-        out.write.mode("overwrite").parquet(path)
+            df = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
+        (df.write.mode("overwrite")
+         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
+                 "false")
+         .parquet(path))
 
     def table_rounds(self, rnd: int, name: str,
                      default: Optional[list] = None) -> list:

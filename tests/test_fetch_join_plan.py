@@ -15,7 +15,9 @@ The same round's link chain (E_links, E_survivors) must cross into
 Python once: the extract mapInPandas also applies filter1 and emits
 the slot and seen-bucket keys, so none of the per-key UDFs may
 reappear as a separate Arrow evaluation over the link stream. Phases
-B and C cross once too, in the per-slot pass (B_routed)."""
+B and C cross once too, in the per-slot pass (B_routed), and are
+numbered by one window over its checkpoint (BC_seq); the uncapped
+phase-D schedule (D_sched) joins nothing."""
 
 import contextlib
 import io
@@ -138,3 +140,22 @@ def test_pages_read_one_verdict(plan_probe):
         # checkpoint keeps just the pre-dup page_class
         assert "final_error" in plan, (stage, plan)
     assert "final_error" not in plan_probe["E_pages"].columns
+
+
+def test_bc_numbering_is_one_window(plan_probe):
+    """Phases B and C are numbered by one running count over the
+    per-slot pass checkpoint: the numbering plan holds exactly one
+    Window, reads the checkpoint and never re-runs the pandas pass."""
+    plan = _formatted_plan(plan_probe["BC_seq"])
+    assert len(_tree_lines(plan, "Window")) == 1, plan
+    assert _tree_lines(plan, "Scan ExistingRDD"), plan
+    assert not _tree_lines(plan, "FlatMapGroupsInPandas"), plan
+
+
+def test_uncapped_schedule_has_no_join(plan_probe):
+    """Phase D's politeness windows read the ip queue alone: no
+    per-bucket state table is joined on, and the uncapped schedule
+    has no cap join either."""
+    plan = _formatted_plan(plan_probe["D_sched"])
+    assert _tree_lines(plan, "Window"), plan
+    assert not _tree_lines(plan, r"\w*Join"), plan

@@ -25,6 +25,9 @@ CONFIGS = {
     "ignore_robots": dict(ignore_robots=True),
     "budgets": dict(fetch_cap_per_round=7, dns_per_round=3,
                     seq_per_round=40),
+    # the fetch cap counts ip buckets, each fetching up to k URLs
+    "fetch_cap_multi": dict(fetch_cap_per_round=7,
+                            fetch_per_ip_per_round=3),
     # one DNS resolution a round: the per-slot pass resolves every
     # queued slot as if selected, and all but one of those results
     # are dropped after its checkpoint in every round

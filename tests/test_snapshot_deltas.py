@@ -73,6 +73,51 @@ def test_prune_keeps_referenced_dirs(spark, dims, seeds, tmp_path):
     assert back.count() == st.tables["fetch_log"].count()
 
 
+# each range-sharded table's range key (plans/state.py _RANGE_SHARDED)
+RANGE_KEYS = {"seen": ["bucket"], "dup_seen": ["bucket"],
+              "queues": ["queue", "qseq"], "queues__rm": ["qseq"]}
+
+
+def test_range_sharded_files_sorted_and_disjoint(spark, dims, seeds,
+                                                 tmp_path):
+    """docs/SCALE.md §3: every file of a range-sharded table is sorted
+    by its range key, and the files of one table dir hold disjoint key
+    ranges, so min/max stats prune a probe to one shard. AQE partition
+    coalescing is off for this crawl so that a dir holds several
+    shards."""
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        store = SnapshotStore(str(tmp_path / "snaps"))
+        run_crawl(spark, CrawlConfig(page_no_duplicate=True), dims,
+                  list(seeds), max_rounds=3, store=store,
+                  keep_snapshots=10 ** 9)
+    finally:
+        spark.conf.set(conf, old)
+    multi = 0
+    for entry in sorted(os.listdir(store.root)):
+        for name, cols in RANGE_KEYS.items():
+            path = os.path.join(store.root, entry, name)
+            if not os.path.isdir(path):
+                continue
+            spans = []
+            for f in sorted(os.listdir(path)):
+                if not f.endswith(".parquet"):
+                    continue
+                t = pq.read_table(os.path.join(path, f),
+                                  columns=cols).to_pydict()
+                keys = list(zip(*(t[c] for c in cols)))
+                if keys:
+                    assert keys == sorted(keys), (entry, name, f)
+                    spans.append((keys[0], keys[-1]))
+            spans.sort()
+            for (_lo, hi), (lo, _hi) in zip(spans, spans[1:]):
+                assert hi < lo, (entry, name, spans)
+            multi += len(spans) > 1
+    assert multi, "no range-sharded dir holds more than one shard"
+
+
 def test_compaction_bounds_chain(spark, tmp_path):
     """After COMPACT_EVERY delta commits the table is rewritten in
     full and the composition list resets — bounding both read fan-in
